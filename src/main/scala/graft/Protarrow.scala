@@ -1,8 +1,12 @@
 package graft
 
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, GraftBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 import graft.proto._
 import graft.conv._
 
@@ -40,13 +44,11 @@ object Protarrow {
       md: PMessageDesc, cfg: GraftConfig = GraftConfig(),
       reg: ProtoRegistry = WellKnown.registry): DataFrame = {
     val schema = messageTypeToSchema(md, cfg, reg)
-    // catalyst-native writer → LocalRelation: skips createDataFrame's
-    // per-row CatalystTypeConverters pass over the external rows (the
-    // external rowWriter path remains for executor-side encodes);
-    // CatalystWriterSpec pins path equality, RoundTripSpec runs the whole
-    // config matrix through here
+    // catalyst-native writer → LocalRelation: no per-row encoder pass;
+    // CatalystWriterSpec pins this transport against the distributed one,
+    // RoundTripSpec runs the whole config matrix through here
     val writer = Codecs.internalRowWriter(md, cfg, reg)
-    org.apache.spark.sql.GraftBridge.localDataFrame(spark, schema, msgs.map(writer))
+    GraftBridge.localDataFrame(spark, schema, msgs.map(writer))
   }
 
   /** Distributed variant (messages_to_table): messages already on
@@ -57,8 +59,8 @@ object Protarrow {
       reg: ProtoRegistry = WellKnown.registry): DataFrame = {
     val spark = ds.sparkSession
     val schema = messageTypeToSchema(md, cfg, reg)
-    val writer = Codecs.rowWriter(md, cfg, reg)
-    spark.createDataFrame(ds.rdd.mapPartitions(_.map(writer)), schema)
+    val writer = Codecs.internalRowWriter(md, cfg, reg)
+    GraftBridge.internalDataFrame(spark, ds.rdd.mapPartitions(_.map(writer)), schema)
   }
 
   /** DataFrame → messages on the driver (table_to_messages,
@@ -77,18 +79,29 @@ object Protarrow {
     // QueryExecutionListeners, which driving executedPlan directly skips
     // (ListenerSpec pins the listener callback)
     val reader = Codecs.internalRowReader(md, df.schema, cfg, reg)
-    org.apache.spark.sql.GraftBridge.withExecutionId(
-        df.queryExecution, "dataFrameToMessages") {
-      df.queryExecution.executedPlan.executeCollect()
-    }.iterator.map(reader).toVector
+    collectInternal(df, "dataFrameToMessages").iterator.map(reader).toVector
   }
+
+  private def collectInternal(df: DataFrame, name: String): Array[InternalRow] =
+    GraftBridge.withExecutionId(df.queryExecution, name) {
+      df.queryExecution.executedPlan.executeCollect()
+    }
+
+  /** External `Row` → InternalRow for `schema`, at the facade's `Row`
+    * edge. Lenient: accepts java.sql and java.time datetimes alike, so
+    * rows collected under either `spark.sql.datetime.java8API.enabled`
+    * setting convert. The serializer reuses its output row and is not
+    * thread-safe — one per call site, consumed before the next call. */
+  private def rowSerializer(schema: StructType): ExpressionEncoder.Serializer[Row] =
+    ExpressionEncoder(schema, lenient = true).createSerializer()
 
   /** Local rows → messages (record_batch_to_messages). */
   def rowsToMessages(rows: Seq[Row], schema: StructType, md: PMessageDesc,
       cfg: GraftConfig = GraftConfig(),
       reg: ProtoRegistry = WellKnown.registry): Seq[DynamicMessage] = {
-    val reader = Codecs.rowReader(md, schema, cfg, reg)
-    rows.map(reader)
+    val reader = Codecs.internalRowReader(md, schema, cfg, reg)
+    val toInternal = rowSerializer(schema)
+    rows.map(r => reader(toInternal(r)))
   }
 
   /** Distributed decode: stays on executors, yields a Dataset of wire-format
@@ -124,7 +137,7 @@ object Protarrow {
       mode: IngestMode = IngestMode.FailFast): DataFrame = {
     val spark = ds.sparkSession
     val schema = messageTypeToSchema(md, cfg, reg)
-    val writer = Codecs.rowWriter(md, cfg, reg)
+    val writer = Codecs.internalRowWriter(md, cfg, reg)
     permissiveScan(spark, ds.rdd, schema, mode,
       org.apache.spark.sql.types.BinaryType,
       b => ProtoWire.decode(b, md, reg), writer, (b: Array[Byte]) => b)
@@ -143,12 +156,12 @@ object Protarrow {
       reg: ProtoRegistry = WellKnown.registry,
       mode: IngestMode = IngestMode.FailFast): DataFrame = {
     val schema = messageTypeToSchema(md, cfg, reg)
-    val writer = Codecs.rowWriter(md, cfg, reg)
+    val writer = Codecs.internalRowWriter(md, cfg, reg)
     val lines = spark.read.textFile(path).rdd
       .mapPartitions(_.filter(_.trim.nonEmpty))
     permissiveScan(spark, lines, schema, mode,
       org.apache.spark.sql.types.StringType,
-      l => ProtoJson.parse(l, md, reg), writer, (l: String) => l)
+      l => ProtoJson.parse(l, md, reg), writer, (l: String) => UTF8String.fromString(l))
   }
 
   /** Shared malformed-record machinery for the ingest scans: wraps the
@@ -156,21 +169,22 @@ object Protarrow {
     * per-record INSIDE mapPartitions — the partition iterator keeps
     * streaming, so tolerance costs nothing on the happy path and no
     * executor-side buffering anywhere. Only the decode (`ProtoJson.parse`
-    * / `ProtoWire.decode`) is caught: a rowWriter/encoder failure is an
-    * ENGINE bug, not dirty data, and must propagate rather than be
-    * reclassified as a corrupt record. */
+    * / `ProtoWire.decode`) is caught: a writer failure is an ENGINE bug,
+    * not dirty data, and must propagate rather than be reclassified as a
+    * corrupt record. `raw` yields the reject's catalyst value for
+    * `corruptType`. */
   private def permissiveScan[A, M](spark: SparkSession,
       rdd: org.apache.spark.rdd.RDD[A], schema: StructType, mode: IngestMode,
       corruptType: org.apache.spark.sql.types.DataType,
-      decode: A => M, write: M => Row, raw: A => Any): DataFrame = {
+      decode: A => M, write: M => InternalRow, raw: A => Any): DataFrame = {
     import org.apache.spark.sql.types.StructField
     import scala.util.control.NonFatal
     mode match {
       case IngestMode.FailFast =>
-        spark.createDataFrame(
+        GraftBridge.internalDataFrame(spark,
           rdd.mapPartitions(_.map(a => write(decode(a)))), schema)
       case IngestMode.DropMalformed =>
-        spark.createDataFrame(
+        GraftBridge.internalDataFrame(spark,
           rdd.mapPartitions(_.flatMap { a =>
             val m = try Some(decode(a)) catch { case NonFatal(_) => None }
             m.iterator.map(write) // writer exceptions propagate
@@ -182,13 +196,13 @@ object Protarrow {
         // PERMISSIVE schema does (good rows keep their nested shapes)
         val out = StructType(schema.fields.map(_.copy(nullable = true)) :+
           StructField(IngestMode.CorruptColumn, corruptType, nullable = true))
-        spark.createDataFrame(
+        GraftBridge.internalDataFrame(spark,
           rdd.mapPartitions(_.map { a =>
             val m = try Some(decode(a)) catch { case NonFatal(_) => None }
-            m match {
-              case Some(msg) => Row.fromSeq(write(msg).toSeq :+ null)
-              case None      => Row.fromSeq(Seq.fill[Any](n)(null) :+ raw(a))
-            }
+            new GenericInternalRow(m match {
+              case Some(msg) => write(msg).toSeq(schema).toArray :+ null
+              case None      => Array.fill[Any](n)(null) :+ raw(a)
+            })
           }), out)
     }
   }
@@ -247,9 +261,10 @@ object Protarrow {
   def writeProtoJsonl(df: DataFrame, md: PMessageDesc, path: String,
       cfg: GraftConfig = GraftConfig(),
       reg: ProtoRegistry = WellKnown.registry): Unit = {
-    val schema = df.schema
-    val reader = Codecs.rowReader(md, schema, cfg, reg)
-    df.mapPartitions(rows => rows.map(r => ProtoJson.toJson(reader(r), reg)))(Encoders.STRING)
+    val reader = Codecs.internalRowReader(md, df.schema, cfg, reg)
+    // catalyst rows straight off toRdd, as in toProtoBinary
+    df.sparkSession.createDataset(df.queryExecution.toRdd.mapPartitions(rows =>
+      rows.map(r => ProtoJson.toJson(reader(r), reg))))(Encoders.STRING)
       .write.mode("overwrite").text(path)
   }
 
@@ -279,10 +294,15 @@ object Protarrow {
   final class MessageExtractor(schema: StructType, md: PMessageDesc,
       cfg: GraftConfig = GraftConfig(),
       reg: ProtoRegistry = WellKnown.registry) extends Serializable {
-    private val reader = Codecs.rowReader(md, schema, cfg, reg)
-    def apply(row: Row): DynamicMessage = reader(row)
+    private val reader = Codecs.internalRowReader(md, schema, cfg, reg)
+    // one serializer per instance (executors get their own copy); the
+    // instance is not for concurrent use from several threads
+    @transient private lazy val toInternal = rowSerializer(schema)
+    def apply(row: Row): DynamicMessage = reader(toInternal(row))
+
     /** Extract row `i` of the DataFrame as one message. Out of range
-      * raises, like the reference's IndexError (message_extractor.py).
+      * raises, like the reference's IndexError (message_extractor.py); a
+      * negative `i` raises before any plan is built.
       * "Row i" follows the DataFrame's current row order — deterministic
       * for sorted or single-partition frames; impose an orderBy first if
       * the frame's order is partition-dependent.
@@ -293,10 +313,11 @@ object Protarrow {
       * handle is O(1) per row (the reference's equivalent also reads
       * from a materialized table, message_extractor.py:156-162). */
     def readTableRow(df: DataFrame, i: Int): DynamicMessage = {
-      val rows = df.limit(i + 1).collect()
+      if (i < 0) throw new IndexOutOfBoundsException(s"row $i of a DataFrame")
+      val rows = collectInternal(df.limit(i + 1), "MessageExtractor.readTableRow")
       if (rows.length <= i) throw new IndexOutOfBoundsException(
         s"row $i of a ${rows.length}-row DataFrame")
-      reader(rows(i))
+      frameReader(df)(rows(i))
     }
 
     /** Collect the frame ONCE into an O(1)-per-row handle — the
@@ -307,11 +328,17 @@ object Protarrow {
       * distributed row-wise path is `df.mapPartitions` over
       * [[MessageExtractor.apply]]. */
     def materialize(df: DataFrame): Materialized =
-      new Materialized(df.collect())
+      new Materialized(collectInternal(df, "MessageExtractor.materialize"), frameReader(df))
+
+    /** Collected rows are catalyst rows of `df.schema`, so they are read
+      * against that schema — by name, exactly as [[dataFrameToMessages]]
+      * reads the same frame. */
+    private def frameReader(df: DataFrame): InternalRow => DynamicMessage =
+      Codecs.internalRowReader(md, df.schema, cfg, reg)
 
     /** Cached-rows extractor: `readRow(i)` is an array index + decode. */
-    final class Materialized private[MessageExtractor] (rows: Array[Row])
-        extends Serializable {
+    final class Materialized private[MessageExtractor] (rows: Array[InternalRow],
+        reader: InternalRow => DynamicMessage) extends Serializable {
       def size: Int = rows.length
       def readRow(i: Int): DynamicMessage = {
         if (i < 0 || i >= rows.length) throw new IndexOutOfBoundsException(

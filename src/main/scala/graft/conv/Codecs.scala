@@ -1,8 +1,14 @@
 package graft.conv
 
 import java.time.{Instant, LocalDate}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, DateTimeUtils, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.proto._
 import graft.proto.PType._
 import GraftConfig.TimeUnit
@@ -14,54 +20,59 @@ import GraftConfig.TimeUnit
   * `MessageExtractor.__init__` message_extractor.py:144-154) — and the
   * per-row closures are Serializable so they run inside executors
   * (mapPartitions) as well as on collected rows.
+  *
+  * There is one tree per direction and it speaks catalyst's internal
+  * representations (UTF8String, epoch micros / days, InternalRow,
+  * ArrayData / MapData): every path — driver LocalRelation, executor
+  * ingest, streaming, `executeCollect` / `toRdd` egress — builds or reads
+  * `InternalRow`s directly, so no per-row `ExpressionEncoder` pass runs
+  * between the codec and Spark. External `Row`s are converted at the
+  * facade's edge (`rowsToMessages`, `MessageExtractor.apply`).
   */
 object Codecs {
 
   // ---------------------------------------------------------------- encode
 
-  /** Compiled writer: proto field value (canonical DynamicMessage repr) →
-    * Spark external value for createDataFrame. */
-  type ValueWriter = Any => Any
-
   private def microsFloor(unit: TimeUnit): Long = math.max(unit.nanos, 1000L)
 
-  /** Scalar/WKT encoder for a single (non-repeated) value of type `t`.
+  /** Scalar/WKT encoder for a single (non-repeated) value of type `t`:
+    * proto value (canonical DynamicMessage repr) → catalyst internal value.
     * `trace` mirrors schema derivation: a recursive message type under
-    * skipRecursiveMessages writes the pruned empty struct. */
-  def valueWriter(t: PType, cfg: GraftConfig, reg: ProtoRegistry,
-      trace: Vector[String] = Vector.empty): ValueWriter = t match {
+    * skipRecursiveMessages writes the pruned empty struct. The temporal
+    * leaves go through the same `DateTimeUtils` conversions Spark applies
+    * to `Instant`/`LocalDate`. */
+  private def catalystValueWriter(t: PType, cfg: GraftConfig, reg: ProtoRegistry,
+      trace: Vector[String]): Any => Any = t match {
     case PDouble | PFloat | PInt32 | PSInt32 | PSFixed32 | PInt64 | PSInt64 |
-         PSFixed64 | PUInt32 | PFixed32 | PUInt64 | PFixed64 | PBool | PString =>
+         PSFixed64 | PUInt32 | PFixed32 | PUInt64 | PFixed64 | PBool =>
       identity
+    case PString => v => UTF8String.fromString(v.asInstanceOf[String])
     case PBytes => v => v.asInstanceOf[Bytes].toArray
     case PEnum(name) =>
       val ed = reg.enum(name)
+      // unknown number → name of the first declared value
+      // (proto_to_arrow.py:236-264)
+      def nameOf(v: Any) = ed.numberToName.getOrElse(v.asInstanceOf[Int], ed.firstName)
       if (!cfg.enumType.nameBased) identity
-      else if (cfg.enumType.binary) { v =>
-        ed.numberToName.getOrElse(v.asInstanceOf[Int], ed.firstName)
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      } else { v =>
-        // unknown number → name of the first declared value
-        // (proto_to_arrow.py:236-264)
-        ed.numberToName.getOrElse(v.asInstanceOf[Int], ed.firstName)
-      }
+      else if (cfg.enumType.binary) v => nameOf(v).getBytes(UTF_8)
+      else v => UTF8String.fromString(nameOf(v))
     case PMessage(WellKnown.TimestampName) =>
       val floor = microsFloor(cfg.timestampUnit)
       v => {
         val m = v.asInstanceOf[DynamicMessage]
         val secs = m.getOrDefault(WellKnown.timestamp.byName("seconds")).asInstanceOf[Long]
         val nanos = m.getOrDefault(WellKnown.timestamp.byName("nanos")).asInstanceOf[Int]
-        Instant.ofEpochSecond(secs, nanos - nanos % floor)
+        DateTimeUtils.instantToMicros(Instant.ofEpochSecond(secs, nanos - nanos % floor))
       }
     case PMessage(WellKnown.DateName) =>
       v => {
         val m = v.asInstanceOf[DynamicMessage]
         val y = m.getOrDefault(WellKnown.date.byName("year")).asInstanceOf[Int]
         // year 0 = unset → sentinel day (docs/types.md:79-84)
-        if (y == 0) LocalDate.ofEpochDay(SchemaConversion.DateSentinelEpochDay)
-        else LocalDate.of(y,
+        if (y == 0) SchemaConversion.DateSentinelEpochDay.toInt
+        else DateTimeUtils.localDateToDays(LocalDate.of(y,
           m.getOrDefault(WellKnown.date.byName("month")).asInstanceOf[Int],
-          m.getOrDefault(WellKnown.date.byName("day")).asInstanceOf[Int])
+          m.getOrDefault(WellKnown.date.byName("day")).asInstanceOf[Int]))
       }
     case PMessage(WellKnown.TimeOfDayName) =>
       val unit = cfg.timeOfDayUnit.nanos
@@ -82,116 +93,25 @@ object Codecs {
         secs * ticksPerSec + nanos / unit
       }
     case PMessage(name) if WellKnown.isWrapper(name) =>
-      val inner = WellKnown.wrapperNames(name)
-      val innerWriter = valueWriter(inner, cfg, reg)
+      val inner = catalystValueWriter(WellKnown.wrapperNames(name), cfg, reg, trace)
       val field = reg.message(name).byName("value")
-      v => innerWriter(v.asInstanceOf[DynamicMessage].getOrDefault(field))
-    case PMessage(WellKnown.EmptyName) => _ => Row.empty
+      v => inner(v.asInstanceOf[DynamicMessage].getOrDefault(field))
+    case PMessage(WellKnown.EmptyName) => _ => InternalRow.empty
     case PMessage(name) if trace.contains(name) =>
       // recursion pruned to struct<> (proto_to_arrow.py:341-345): the
       // payload is dropped, presence survives as an empty row
-      _ => Row.empty
+      _ => InternalRow.empty
     case PMessage(name) =>
-      val rw = rowWriter(reg.message(name), cfg, reg, trace :+ name)
+      val rw = catalystRowWriter(reg.message(name), cfg, reg, trace :+ name)
       v => rw(v.asInstanceOf[DynamicMessage])
   }
 
   /** One field of a message → the cell value (null for absent presence
     * fields; defaults for absent plain fields — proto_to_arrow.py:417-453,
-    * 604-616). */
-  def fieldWriter(f: PField, cfg: GraftConfig, reg: ProtoRegistry,
-      trace: Vector[String] = Vector.empty): DynamicMessage => Any = {
-    if (f.isMap) {
-      val kw = valueWriter(f.mapKey, cfg, reg, trace)
-      val vw = valueWriter(f.mapValue, cfg, reg, trace)
-      if (cfg.mapAsList) { m =>
-        m.getOrDefault(f).asInstanceOf[Map[Any, Any]]
-          .map { case (k, v) => Row(kw(k), vw(v)) }.toVector
-      } else { m =>
-        m.getOrDefault(f).asInstanceOf[Map[Any, Any]]
-          .map { case (k, v) => kw(k) -> vw(v) }
-      }
-    } else if (f.repeated) {
-      val vw = valueWriter(f.typ, cfg, reg, trace)
-      m => m.getOrDefault(f).asInstanceOf[Vector[Any]].map(vw)
-    } else if (f.hasPresence) {
-      val vw = valueWriter(f.typ, cfg, reg, trace)
-      m => m.get(f.number) match {
-        case Some(v) => vw(v)
-        case None => null
-      }
-    } else {
-      val vw = valueWriter(f.typ, cfg, reg, trace)
-      m => vw(m.getOrDefault(f))
-    }
-  }
-
-  /** Compiled message → Row writer. */
-  def rowWriter(md: PMessageDesc, cfg: GraftConfig, reg: ProtoRegistry,
-      trace: Vector[String]): DynamicMessage => Row = {
-    val writers = md.fields.map(f => fieldWriter(f, cfg, reg, trace)).toArray
-    m => Row.fromSeq(writers.map(w => w(m)).toSeq)
-  }
-
-  /** Compiled message → Row writer (top-level entry). */
-  def rowWriter(md: PMessageDesc, cfg: GraftConfig, reg: ProtoRegistry): DynamicMessage => Row =
-    rowWriter(md, cfg, reg, Vector(md.fullName))
-
-  // ------------------------------------------- encode (catalyst-native)
-
-  /** Catalyst-internal twin of [[valueWriter]]: emits UTF8String /
-    * epoch-micros / epoch-days / InternalRow / ArrayData / MapData so the
-    * driver-local encode can build `InternalRow`s directly and skip the
-    * per-row `CatalystTypeConverters` pass `createDataFrame(rows, schema)`
-    * would run over the external values (~1 s of the 10k-row full-shape
-    * encode point). Only the representations differ: every leaf delegates
-    * to [[valueWriter]] where external == internal, and the temporal
-    * leaves go through the SAME `DateTimeUtils` conversions Spark itself
-    * applies to `Instant`/`LocalDate` — so the two paths are value-equal
-    * by construction, and the full RoundTripSpec matrix (which runs the
-    * internal path via messagesToDataFrame) plus CatalystWriterSpec's
-    * explicit cross-path comparison pin it. */
-  def catalystValueWriter(t: PType, cfg: GraftConfig, reg: ProtoRegistry,
-      trace: Vector[String] = Vector.empty): ValueWriter = {
-    import org.apache.spark.unsafe.types.UTF8String
-    import org.apache.spark.sql.catalyst.util.DateTimeUtils
-    t match {
-      case PString => v => UTF8String.fromString(v.asInstanceOf[String])
-      case PEnum(name) if cfg.enumType.nameBased && !cfg.enumType.binary =>
-        val ed = reg.enum(name)
-        v => UTF8String.fromString(
-          ed.numberToName.getOrElse(v.asInstanceOf[Int], ed.firstName))
-      case PMessage(WellKnown.TimestampName) =>
-        val ext = valueWriter(t, cfg, reg, trace)
-        v => DateTimeUtils.instantToMicros(ext(v).asInstanceOf[Instant])
-      case PMessage(WellKnown.DateName) =>
-        val ext = valueWriter(t, cfg, reg, trace)
-        v => DateTimeUtils.localDateToDays(ext(v).asInstanceOf[LocalDate])
-      case PMessage(WellKnown.TimeOfDayName) | PMessage(WellKnown.DurationName) =>
-        valueWriter(t, cfg, reg, trace) // already plain longs
-      case PMessage(name) if WellKnown.isWrapper(name) =>
-        val inner = catalystValueWriter(WellKnown.wrapperNames(name), cfg, reg, trace)
-        val field = reg.message(name).byName("value")
-        v => inner(v.asInstanceOf[DynamicMessage].getOrDefault(field))
-      case PMessage(WellKnown.EmptyName) =>
-        _ => org.apache.spark.sql.catalyst.InternalRow.empty
-      case PMessage(name) if trace.contains(name) =>
-        _ => org.apache.spark.sql.catalyst.InternalRow.empty
-      case PMessage(name) =>
-        val rw = catalystRowWriter(reg.message(name), cfg, reg, trace :+ name)
-        v => rw(v.asInstanceOf[DynamicMessage])
-      // numerics, bool, bytes, binary enums, TimeOfDay/Duration longs:
-      // external and internal representations coincide
-      case _ => valueWriter(t, cfg, reg, trace)
-    }
-  }
-
-  /** Catalyst twin of [[fieldWriter]]: same absent/default semantics,
-    * internal containers (GenericArrayData / ArrayBasedMapData). */
-  def catalystFieldWriter(f: PField, cfg: GraftConfig, reg: ProtoRegistry,
+    * 604-616), in internal containers (GenericArrayData /
+    * ArrayBasedMapData). */
+  private def catalystFieldWriter(f: PField, cfg: GraftConfig, reg: ProtoRegistry,
       trace: Vector[String]): DynamicMessage => Any = {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
     if (f.isMap) {
       val kw = catalystValueWriter(f.mapKey, cfg, reg, trace)
       val vw = catalystValueWriter(f.mapValue, cfg, reg, trace)
@@ -220,66 +140,73 @@ object Codecs {
     }
   }
 
-  private def catalystRowWriter(md: PMessageDesc, cfg: GraftConfig,
-      reg: ProtoRegistry, trace: Vector[String])
-      : DynamicMessage => org.apache.spark.sql.catalyst.InternalRow = {
+  private def catalystRowWriter(md: PMessageDesc, cfg: GraftConfig, reg: ProtoRegistry,
+      trace: Vector[String]): DynamicMessage => InternalRow = {
     val writers = md.fields.map(f => catalystFieldWriter(f, cfg, reg, trace)).toArray
-    m => new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      writers.map(w => w(m)))
+    m => new GenericInternalRow(writers.map(w => w(m)))
   }
 
   /** Compiled message → InternalRow writer (top-level entry). */
   def internalRowWriter(md: PMessageDesc, cfg: GraftConfig, reg: ProtoRegistry)
-      : DynamicMessage => org.apache.spark.sql.catalyst.InternalRow =
+      : DynamicMessage => InternalRow =
     catalystRowWriter(md, cfg, reg, Vector(md.fullName))
+
+  /** Message → external `Row`: [[internalRowWriter]] followed by the
+    * schema's `ExpressionEncoder` deserializer. No library path uses it;
+    * it is kept only because the benchmark's traced ingest
+    * (`perfbench/src/graft/perfbench/Workloads.scala`) compiles against it. */
+  def rowWriter(md: PMessageDesc, cfg: GraftConfig, reg: ProtoRegistry): DynamicMessage => Row = {
+    val write = internalRowWriter(md, cfg, reg)
+    val toRow = ExpressionEncoder(SchemaConversion.messageTypeToSchema(md, cfg, reg))
+      .resolveAndBind().createDeserializer()
+    m => toRow(write(m))
+  }
 
   // ---------------------------------------------------------------- decode
 
-  /** Scalar/WKT decoder: Spark external value (collected Row cell) →
-    * canonical proto value. */
-  def valueReader(t: PType, cfg: GraftConfig, reg: ProtoRegistry): Any => Any = t match {
-    case PDouble | PFloat | PBool | PString => identity
+  private def toLong(v: Any): Long = v match {
+    case l: Long => l
+    case i: Int => i.toLong
+    case other => throw new IllegalArgumentException(s"not integral: $other")
+  }
+
+  /** Scalar/WKT decoder: catalyst internal value of type `dt` (a cell of
+    * an `executeCollect()` / `toRdd` row) → canonical proto value. Reading
+    * internal rows directly skips the whole-row internal→external
+    * deserializer and its per-cell Timestamp/LocalDate/Row/Map object
+    * churn. */
+  private def catalystValueReader(t: PType, dt: DataType, cfg: GraftConfig,
+      reg: ProtoRegistry): Any => Any = t match {
+    case PDouble | PFloat | PBool => identity
+    case PString => v => v.asInstanceOf[UTF8String].toString
     case PInt32 | PSInt32 | PSFixed32 => v => v.asInstanceOf[Int]
     case PInt64 | PSInt64 | PSFixed64 => v => v.asInstanceOf[Long]
     case PUInt32 | PFixed32 | PUInt64 | PFixed64 => v => toLong(v)
     case PBytes => v => Bytes(v.asInstanceOf[Array[Byte]])
     case PEnum(name) =>
       val ed = reg.enum(name)
+      // unknown name → 0 (arrow_to_proto.py:279-291)
       if (!cfg.enumType.nameBased) v => v.asInstanceOf[Int]
-      else if (cfg.enumType.binary) { v =>
-        val s = new String(v.asInstanceOf[Array[Byte]],
-          java.nio.charset.StandardCharsets.UTF_8)
-        ed.nameToNumber.getOrElse(s, 0) // unknown name → 0 (arrow_to_proto.py:279-291)
-      } else v => ed.nameToNumber.getOrElse(v.asInstanceOf[String], 0)
+      else if (cfg.enumType.binary)
+        v => ed.nameToNumber.getOrElse(new String(v.asInstanceOf[Array[Byte]], UTF_8), 0)
+      else v => ed.nameToNumber.getOrElse(v.asInstanceOf[UTF8String].toString, 0)
     case PMessage(WellKnown.TimestampName) =>
       v => {
-        val (secs, nanos) = v match {
-          case i: Instant => (i.getEpochSecond, i.getNano)
-          case ts: java.sql.Timestamp =>
-            // java.sql.Timestamp is hybrid-calendar; rebase through Spark's
-            // own conversion so pre-1582 instants round-trip exactly
-            val micros = org.apache.spark.sql.catalyst.util.DateTimeUtils
-              .fromJavaTimestamp(ts)
-            (Math.floorDiv(micros, 1000000L), (Math.floorMod(micros, 1000000L) * 1000L).toInt)
-          case other => throw new IllegalArgumentException(s"not a timestamp: $other")
-        }
-        DynamicMessage(WellKnown.timestamp,
-          Map(1 -> secs, 2 -> nanos))
+        val micros = v.asInstanceOf[Long]
+        DynamicMessage(WellKnown.timestamp, Map(
+          1 -> Math.floorDiv(micros, 1000000L),
+          2 -> (Math.floorMod(micros, 1000000L) * 1000L).toInt))
       }
     case PMessage(WellKnown.DateName) =>
       v => {
-        val ld = v match {
-          case d: LocalDate => d
-          case d: java.sql.Date =>
-            // rebase hybrid → proleptic via Spark (ancient dates differ)
-            LocalDate.ofEpochDay(
-              org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaDate(d).toLong)
-          case other => throw new IllegalArgumentException(s"not a date: $other")
-        }
-        if (ld.toEpochDay == SchemaConversion.DateSentinelEpochDay)
+        val days = v.asInstanceOf[Int]
+        if (days == SchemaConversion.DateSentinelEpochDay)
           DynamicMessage.empty(WellKnown.date) // sentinel → unset Date()
-        else DynamicMessage(WellKnown.date,
-          Map(1 -> ld.getYear, 2 -> ld.getMonthValue, 3 -> ld.getDayOfMonth))
+        else {
+          val ld = LocalDate.ofEpochDay(days.toLong)
+          DynamicMessage(WellKnown.date,
+            Map(1 -> ld.getYear, 2 -> ld.getMonthValue, 3 -> ld.getDayOfMonth))
+        }
       }
     case PMessage(WellKnown.TimeOfDayName) =>
       val unit = cfg.timeOfDayUnit.nanos
@@ -304,171 +231,25 @@ object Codecs {
       }
     case PMessage(name) if WellKnown.isWrapper(name) =>
       val wrapperDesc = reg.message(name)
-      val innerReader = valueReader(WellKnown.wrapperNames(name), cfg, reg)
-      v => DynamicMessage(wrapperDesc, Map(1 -> innerReader(v)))
+      val inner = catalystValueReader(WellKnown.wrapperNames(name), dt, cfg, reg)
+      v => DynamicMessage(wrapperDesc, Map(1 -> inner(v)))
     case PMessage(WellKnown.EmptyName) =>
       _ => DynamicMessage.empty(WellKnown.empty)
     case PMessage(name) =>
-      val md = reg.message(name)
-      // struct cells decode against the derived struct type
-      lazy val rr = rowReader(md,
-        SchemaConversion.messageTypeToStructType(md, cfg, reg), cfg, reg)
-      v => rr(v.asInstanceOf[Row])
-  }
-
-  private def toLong(v: Any): Long = v match {
-    case l: Long => l
-    case i: Int => i.toLong
-    case other => throw new IllegalArgumentException(s"not integral: $other")
-  }
-
-  /** Compiled Row → message reader against a concrete row schema.
-    * Columns missing from the schema are skipped (the reference's
-    * tolerate-missing-columns semantics, arrow_to_proto.py:633-656);
-    * null cells in non-presence positions read as proto defaults. */
-  def rowReader(md: PMessageDesc, schema: StructType, cfg: GraftConfig,
-      reg: ProtoRegistry): Row => DynamicMessage = {
-    val steps: Array[Row => Option[(Int, Any)]] = md.fields.flatMap { f =>
-      val idx = schema.fieldNames.indexOf(f.name)
-      if (idx < 0) None // column absent: skip field
-      else Some(compileFieldReader(f, idx, schema.fields(idx).dataType, cfg, reg))
-    }.toArray
-    row => {
-      var values = Map.empty[Int, Any]
-      steps.foreach { step =>
-        step(row).foreach { case (num, v) => values += (num -> v) }
+      // nested messages decode against the *actual* struct type in the
+      // data, which may have fewer columns than the descriptor
+      // (tests/test_coverage.py:345-369)
+      val st = dt match {
+        case s: StructType => s
+        case other => throw new IllegalArgumentException(
+          s"message $name needs a struct column, got ${other.simpleString}")
       }
-      DynamicMessage(md, values)
-    }
+      val rr = internalRowReader(reg.message(name), st, cfg, reg)
+      v => rr(v.asInstanceOf[InternalRow])
   }
 
-  private def compileFieldReader(f: PField, idx: Int, dt: DataType,
-      cfg: GraftConfig, reg: ProtoRegistry): Row => Option[(Int, Any)] = {
-    if (f.isMap) {
-      val kr = valueReader(f.mapKey, cfg, reg)
-      val vr = structAwareReader(f.mapValue, dt match {
-        case ArrayType(StructType(fields), _) if cfg.mapAsList => fields(1).dataType
-        case MapType(_, vt, _) => vt
-        case other => other
-      }, cfg, reg)
-      // null map VALUE → entry with the proto default (mirrors the
-      // reference's _merge_assign_map: a None message value materializes
-      // the key with a default entry, arrow_to_proto.py:399-404); without
-      // this a null struct value NPE'd and a null bytes value crashed
-      val defaultV: Any = f.mapValue match {
-        case PMessage(name) => DynamicMessage.empty(reg.message(name))
-        case t => PType.defaultOf(t)
-      }
-      def vOrDefault(v: Any): Any = if (v == null) defaultV else vr(v)
-      if (cfg.mapAsList) { row =>
-        if (row.isNullAt(idx)) None
-        else {
-          val entries = row.getSeq[Row](idx)
-          val m = entries.map(e => kr(e.get(0)) -> vOrDefault(e.get(1))).toMap
-          if (m.isEmpty) None else Some(f.number -> m)
-        }
-      } else { row =>
-        if (row.isNullAt(idx)) None
-        else {
-          val m = row.getMap[Any, Any](idx).map { case (k, v) => kr(k) -> vOrDefault(v) }.toMap
-          if (m.isEmpty) None else Some(f.number -> m)
-        }
-      }
-    } else if (f.repeated) {
-      val elemType = dt match {
-        case ArrayType(et, _) => et
-        case other => other
-      }
-      val vr = structAwareReader(f.typ, elemType, cfg, reg)
-      row =>
-        if (row.isNullAt(idx)) None
-        else {
-          // a null ELEMENT raises loudly: proto repeated fields cannot
-          // hold nulls, and silently dropping the element would shrink
-          // the list and break positional correlation (the reference
-          // errors on the same input — AppendAssigner converts the null
-          // scalar and protobuf rejects the None append)
-          val xs = row.getSeq[Any](idx).map { v =>
-            if (v == null) throw new IllegalArgumentException(
-              s"null element in repeated field ${f.name}: proto repeated " +
-                "fields cannot represent null")
-            vr(v)
-          }.toVector
-          if (xs.isEmpty) None else Some(f.number -> xs)
-        }
-    } else {
-      val vr = structAwareReader(f.typ, dt, cfg, reg)
-      row =>
-        if (row.isNullAt(idx)) None // null → unset (presence) / default (plain)
-        else Some(f.number -> vr(row.get(idx)))
-    }
-  }
-
-  /** For nested plain messages, decode against the *actual* struct type in
-    * the data (which may have fewer columns than the descriptor —
-    * tests/test_coverage.py:345-369); WKTs/scalars use valueReader. */
-  private def structAwareReader(t: PType, dt: DataType, cfg: GraftConfig,
-      reg: ProtoRegistry): Any => Any = t match {
-    case PMessage(name) if !WellKnown.isWellKnown(name) =>
-      val md = reg.message(name)
-      dt match {
-        case st: StructType =>
-          val rr = rowReader(md, st, cfg, reg)
-          v => rr(v.asInstanceOf[Row])
-        case _ => valueReader(t, cfg, reg)
-      }
-    case _ => valueReader(t, cfg, reg)
-  }
-
-  // ------------------------------------------- decode (catalyst-native)
-
-  /** Catalyst-internal twin of [[valueReader]]: consumes internal
-    * representations (UTF8String, epoch micros/days, InternalRow,
-    * ArrayData/MapData) so [[graft.Protarrow.dataFrameToMessages]] and
-    * [[graft.Protarrow.toProtoBinary]] can read `executeCollect()` /
-    * `toRdd` rows directly, skipping the whole-row internal→external
-    * deserializer (and its per-cell Timestamp/LocalDate/Row/Map object
-    * churn — the dominant, JIT-sensitive cost of the driver-collect
-    * decode). Every branch delegates to [[valueReader]] where internal ==
-    * external; temporal branches re-enter it with the reconstructed
-    * Instant/LocalDate so the unit/sentinel semantics stay one
-    * definition. Gated by the RoundTripSpec matrix + the pa63 wire
-    * round-trip oracle (both run through these readers). */
-  private def catalystValueReader(t: PType, dt: DataType, cfg: GraftConfig,
-      reg: ProtoRegistry): Any => Any = {
-    import org.apache.spark.unsafe.types.UTF8String
-    (t, dt) match {
-      case (PString, _) => v => v.asInstanceOf[UTF8String].toString
-      case (PEnum(name), StringType) if cfg.enumType.nameBased && !cfg.enumType.binary =>
-        val ed = reg.enum(name)
-        v => ed.nameToNumber.getOrElse(v.asInstanceOf[UTF8String].toString, 0)
-      case (PMessage(WellKnown.TimestampName), TimestampType) =>
-        v => {
-          val micros = v.asInstanceOf[Long]
-          DynamicMessage(WellKnown.timestamp, Map(
-            1 -> Math.floorDiv(micros, 1000000L),
-            2 -> (Math.floorMod(micros, 1000000L) * 1000L).toInt))
-        }
-      case (PMessage(WellKnown.DateName), DateType) =>
-        val ext = valueReader(t, cfg, reg) // sentinel/unset semantics live there
-        v => ext(LocalDate.ofEpochDay(v.asInstanceOf[Int].toLong))
-      case (PMessage(name), _) if WellKnown.isWrapper(name) =>
-        val wrapperDesc = reg.message(name)
-        val inner = catalystValueReader(WellKnown.wrapperNames(name), dt, cfg, reg)
-        v => DynamicMessage(wrapperDesc, Map(1 -> inner(v)))
-      case (PMessage(name), st: StructType) if !WellKnown.isWellKnown(name) =>
-        val rr = internalRowReader(reg.message(name), st, cfg, reg)
-        v => rr(v.asInstanceOf[org.apache.spark.sql.catalyst.InternalRow])
-      // numerics, bool, bytes, binary enums, TimeOfDay/Duration ticks,
-      // Empty: internal and external representations coincide
-      case _ => valueReader(t, cfg, reg)
-    }
-  }
-
-  private def compileCatalystFieldReader(f: PField, idx: Int, dt: DataType,
-      cfg: GraftConfig, reg: ProtoRegistry)
-      : org.apache.spark.sql.catalyst.InternalRow => Option[(Int, Any)] = {
-    type IRow = org.apache.spark.sql.catalyst.InternalRow
+  private def catalystFieldReader(f: PField, idx: Int, dt: DataType,
+      cfg: GraftConfig, reg: ProtoRegistry): InternalRow => Option[(Int, Any)] = {
     if (f.isMap) {
       val (kDt, vDt) = dt match {
         case ArrayType(StructType(fields), _) if cfg.mapAsList =>
@@ -478,12 +259,15 @@ object Codecs {
       }
       val kr = catalystValueReader(f.mapKey, kDt, cfg, reg)
       val vr = catalystValueReader(f.mapValue, vDt, cfg, reg)
+      // null map VALUE → entry with the proto default (mirrors the
+      // reference's _merge_assign_map: a None message value materializes
+      // the key with a default entry, arrow_to_proto.py:399-404)
       val defaultV: Any = f.mapValue match {
         case PMessage(name) => DynamicMessage.empty(reg.message(name))
         case t => PType.defaultOf(t)
       }
       def vOrDefault(v: Any): Any = if (v == null) defaultV else vr(v)
-      if (cfg.mapAsList) { (row: IRow) =>
+      if (cfg.mapAsList) { (row: InternalRow) =>
         if (row.isNullAt(idx)) None
         else {
           val entries = row.getArray(idx)
@@ -497,7 +281,7 @@ object Codecs {
           }
           if (m.isEmpty) None else Some(f.number -> m)
         }
-      } else { (row: IRow) =>
+      } else { (row: InternalRow) =>
         if (row.isNullAt(idx)) None
         else {
           val md = row.getMap(idx)
@@ -515,9 +299,14 @@ object Codecs {
         case other => other
       }
       val vr = catalystValueReader(f.typ, elemType, cfg, reg)
-      (row: IRow) =>
+      (row: InternalRow) =>
         if (row.isNullAt(idx)) None
         else {
+          // a null ELEMENT raises loudly: proto repeated fields cannot
+          // hold nulls, and silently dropping the element would shrink
+          // the list and break positional correlation (the reference
+          // errors on the same input — AppendAssigner converts the null
+          // scalar and protobuf rejects the None append)
           val xs = row.getArray(idx).toObjectArray(elemType).map { v =>
             if (v == null) throw new IllegalArgumentException(
               s"null element in repeated field ${f.name}: proto repeated " +
@@ -528,21 +317,22 @@ object Codecs {
         }
     } else {
       val vr = catalystValueReader(f.typ, dt, cfg, reg)
-      (row: IRow) =>
+      (row: InternalRow) =>
         if (row.isNullAt(idx)) None // null → unset (presence) / default (plain)
         else Some(f.number -> vr(row.get(idx, dt)))
     }
   }
 
-  /** Compiled InternalRow → message reader — [[rowReader]]'s catalyst
-    * twin, same missing-column tolerance. */
+  /** Compiled InternalRow → message reader against a concrete row schema.
+    * Columns missing from the schema are skipped (the reference's
+    * tolerate-missing-columns semantics, arrow_to_proto.py:633-656);
+    * null cells in non-presence positions read as proto defaults. */
   def internalRowReader(md: PMessageDesc, schema: StructType, cfg: GraftConfig,
-      reg: ProtoRegistry)
-      : org.apache.spark.sql.catalyst.InternalRow => DynamicMessage = {
+      reg: ProtoRegistry): InternalRow => DynamicMessage = {
     val steps = md.fields.flatMap { f =>
       val idx = schema.fieldNames.indexOf(f.name)
       if (idx < 0) None // column absent: skip field
-      else Some(compileCatalystFieldReader(f, idx, schema.fields(idx).dataType, cfg, reg))
+      else Some(catalystFieldReader(f, idx, schema.fields(idx).dataType, cfg, reg))
     }.toArray
     row => {
       var values = Map.empty[Int, Any]

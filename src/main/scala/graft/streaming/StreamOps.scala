@@ -1,6 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, GraftBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.types.DataType
 import org.apache.spark.sql.functions._
 import graft.proto._
 import graft.conv.{Codecs, GraftConfig, SchemaConversion}
@@ -20,22 +24,15 @@ object StreamOps {
 
   /** Streaming decode: wire-format payload column → typed rows (the
     * streaming twin of [[graft.Protarrow.fromProtoBinary]]; works on
-    * streaming Datasets because it avoids RDD APIs). */
+    * streaming Datasets because it avoids RDD APIs). The codec runs
+    * inside one [[DecodeProto]] expression, so rows go from the writer
+    * straight into catalyst with no encoder pass. */
   def decodeProtoStream(payloads: Dataset[Array[Byte]], md: PMessageDesc,
       cfg: GraftConfig = GraftConfig(),
       reg: ProtoRegistry = WellKnown.registry): DataFrame = {
-    val schema = SchemaConversion.messageTypeToSchema(md, cfg, reg)
-    val writer = Codecs.rowWriter(md, cfg, reg)
-    // lenient row encoder: the writer emits java.time values (Instant /
-    // LocalDate — proleptic, exact for ancient instants); the strict
-    // encoder would reject them for java.sql ones unless the session flips
-    // datetime.java8API. Lenient accepts both — same tolerance the batch
-    // paths get from createDataFrame's converters.
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(schema, lenient = true)
-    payloads.mapPartitions { it =>
-      it.map(b => writer(ProtoWire.decode(b, md, reg)))
-    }(enc).toDF()
+    val payload = GraftBridge.expression(payloads.col(payloads.columns.head))
+    payloads.select(GraftBridge.column(DecodeProto(payload, md, cfg, reg)).as("m"))
+      .select("m.*")
   }
 
   /** Tumbling-window counts with a watermark: event-time aggregation whose
@@ -962,4 +959,23 @@ object StreamOps {
       lastBatchId = batchId
     }
   }
+}
+
+/** Wire-format payload (BINARY) → the message's struct: the compiled
+  * [[Codecs.internalRowWriter]] as a catalyst expression. Not cheap, so
+  * `CollapseProject` keeps it in its own projection instead of inlining
+  * it into each field extraction (StreamingSpec pins one evaluation). */
+private[streaming] case class DecodeProto(child: Expression, md: PMessageDesc,
+    cfg: GraftConfig, reg: ProtoRegistry) extends UnaryExpression with CodegenFallback {
+  @transient private lazy val writer = Codecs.internalRowWriter(md, cfg, reg)
+  override lazy val dataType: DataType = SchemaConversion.messageTypeToSchema(md, cfg, reg)
+  override def nullable: Boolean = false
+  override def prettyName: String = "decode_proto"
+  override def toString: String = s"$prettyName($child, ${md.fullName})"
+  override def eval(input: InternalRow): Any = child.eval(input) match {
+    case b: Array[Byte] => writer(ProtoWire.decode(b, md, reg))
+    case null => throw new IllegalArgumentException(s"null ${md.fullName} payload")
+  }
+  override protected def withNewChildInternal(newChild: Expression): DecodeProto =
+    copy(child = newChild)
 }

@@ -25,6 +25,14 @@ object GraftBridge {
       catalyst.plans.logical.LocalRelation(
         catalyst.types.DataTypeUtils.toAttributes(schema), rows))
 
+  /** Distributed DataFrame from an RDD of InternalRows — what
+    * `createDataFrame(rdd, schema)` becomes AFTER its per-row
+    * ExpressionEncoder pass. Same contract as [[localDataFrame]]: the
+    * rows already hold catalyst representations for `schema`. */
+  def internalDataFrame(spark: SparkSession, rows: org.apache.spark.rdd.RDD[catalyst.InternalRow],
+      schema: types.StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
+
   /** Runs `body` under a registered SQL execution id — what Dataset's own
     * withAction does around collect(). Callers that drive executedPlan
     * directly (graft's catalyst-native collect) would otherwise be

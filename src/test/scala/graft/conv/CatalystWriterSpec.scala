@@ -1,25 +1,29 @@
 package graft.conv
 
-import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.Encoders
 import org.scalacheck.Gen
 import graft.proto._
 import graft.{Protarrow, SparkSpec}
 import graft.conv.GraftConfig.{EnumRepr, TimeUnit}
 
-/** The catalyst-native encode path (internalRowWriter → LocalRelation,
-  * the driver-local fast path behind messagesToDataFrame) must be
-  * value-equal to the external path (rowWriter → createDataFrame, which
-  * runs CatalystTypeConverters per row). RoundTripSpec pins the internal
-  * path against golden fixtures across the full 35-config matrix; THIS
-  * spec pins the two paths against each other on random messages over the
-  * representative leaf configs, so a representation bug in one converter
-  * can't hide behind a tolerant decoder. */
+/** The two transports that take messages into a frame must agree cell
+  * by cell: the driver one (messagesToDataFrame: internalRowWriter →
+  * LocalRelation) and the distributed one (fromProtoBinary over
+  * ProtoWire.encode bytes: wire decode → internalRowWriter in executor
+  * tasks → internalCreateDataFrame). RoundTripSpec pins the driver path
+  * against golden fixtures across the full config matrix; THIS spec pins
+  * the two transports against each other on random messages over the
+  * representative leaf configs. `collect()` runs Spark's own deserializer
+  * over every cell, so a wrong internal representation from the writer
+  * throws here instead of hiding behind the graft reader. In the test
+  * names "internal" is the driver-local transport and "external" the
+  * ingest from wire bytes. */
 class CatalystWriterSpec extends SparkSpec {
 
   private val reg = Schemas.registry
 
-  // one config per distinct leaf representation the catalyst writer owns:
-  // string enums (UTF8String), binary enums (delegate), temporal units
+  // one config per distinct leaf representation the writer owns: string
+  // enums (UTF8String), binary enums (bytes), temporal units
   // (micros/days/long ticks), map-as-list vs MapData, nullability knobs
   private val configs = Seq(
     GraftConfig(),
@@ -52,8 +56,8 @@ class CatalystWriterSpec extends SparkSpec {
     val msgs = TestGen.sample(Gen.listOfN(8, TestGen.genMessage(md)), 11L + i)
     val schema = Protarrow.messageTypeToSchema(md, cfg, reg)
     val internal = Protarrow.messagesToDataFrame(spark, msgs, md, cfg, reg)
-    val externalWriter = Codecs.rowWriter(md, cfg, reg)
-    val external = spark.createDataFrame(msgs.map(externalWriter).asJava, schema)
+    val wire = spark.createDataset(msgs.map(m => ProtoWire.encode(m, reg)))(Encoders.BINARY)
+    val external = Protarrow.fromProtoBinary(wire, md, cfg, reg)
     assert(internal.schema === external.schema)
     val (iRows, eRows) = (internal.collect(), external.collect())
     assert(iRows.length === eRows.length)

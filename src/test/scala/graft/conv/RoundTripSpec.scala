@@ -165,6 +165,43 @@ class RoundTripSpec extends SparkSpec {
     val ex = new Protarrow.MessageExtractor(df.schema, md, GraftConfig(), reg)
     assert(ex.readTableRow(df, 0) === msgs(0))
     assert(ex.readTableRow(df, 1) === msgs(1))
+    Seq(-1, -2).foreach { i =>
+      intercept[IndexOutOfBoundsException] { ex.readTableRow(df, i) }
+    }
+  }
+
+  test("Row edge: rowsToMessages and MessageExtractor.apply read both datetime APIs") {
+    val md = Schemas.msg("ExampleMessage")
+    // pre-1582 instants and dates (hybrid vs proleptic calendars differ
+    // there) and the year-0 Date sentinel, in plain, repeated and map cells
+    val msgs = Seq(
+      """{"timestamp_value": "1500-03-01T10:00:00.123456Z",
+        | "date_value": {"year": 1200, "month": 2, "day": 29},
+        | "timestamp_values": ["0001-01-01T00:00:00Z", "2024-06-30T23:59:59.999999Z"],
+        | "date_values": [{"year": 1582, "month": 10, "day": 4}]}""",
+      """{"date_value": {"month": 1, "day": 1},
+        | "timestamp_string_map": {"a": "1066-10-14T09:00:00Z"},
+        | "date_string_map": {"b": {"year": 1, "month": 1, "day": 1}}}""",
+      """{"timestamp_value": "2020-02-29T12:00:00Z",
+        | "date_value": {"year": 2020, "month": 2, "day": 29}}"""
+    ).map(j => ProtoJson.parse(j.stripMargin.replace("\n", " "), md, reg))
+    val key = "spark.sql.datetime.java8API.enabled"
+    Seq(false -> classOf[java.sql.Timestamp], true -> classOf[java.time.Instant])
+      .foreach { case (java8, tsClass) =>
+        spark.conf.set(key, java8)
+        try {
+          val df = Protarrow.messagesToDataFrame(spark, msgs, md, GraftConfig(), reg)
+          val rows = df.collect().toSeq
+          assert(tsClass.isInstance(rows.head.getAs[Any]("timestamp_value")))
+          val expected = Protarrow.dataFrameToMessages(df, md, GraftConfig(), reg)
+          assert(expected.head === msgs.head)
+          assert(expected(1).get(27).get === DynamicMessage.empty(WellKnown.date))
+          assert(Protarrow.rowsToMessages(rows, df.schema, md, GraftConfig(), reg) === expected,
+            s"java8API=$java8")
+          val ex = new Protarrow.MessageExtractor(df.schema, md, GraftConfig(), reg)
+          assert(rows.map(ex.apply) === expected, s"java8API=$java8")
+        } finally spark.conf.unset(key)
+      }
   }
 }
 

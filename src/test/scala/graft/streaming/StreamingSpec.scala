@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 import graft.proto._
 import graft.conv.GraftConfig
@@ -27,6 +27,12 @@ class StreamingSpec extends SparkSpec {
       .outputMode("complete").start()
     try {
       q.processAllAvailable()
+      // each payload is decoded once: the optimizer must not inline the
+      // decode into every extracted field
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+        .lastExecution.optimizedPlan
+      val decodes = plan.flatMap(_.expressions.flatMap(_.collect { case d: DecodeProto => d }))
+      assert(decodes.size === 1, plan)
       val out = spark.table("proto_agg").collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(out === Map("u0" -> 30L, "u1" -> 25L))
