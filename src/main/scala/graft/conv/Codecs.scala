@@ -56,31 +56,32 @@ object Codecs {
       if (!cfg.enumType.nameBased) identity
       else if (cfg.enumType.binary) v => nameOf(v).getBytes(UTF_8)
       else v => UTF8String.fromString(nameOf(v))
+    // well-known types are read by field ordinal (their layouts are fixed
+    // in WellKnown): Timestamp/Duration seconds 0, nanos 1; Date year 0,
+    // month 1, day 2; TimeOfDay hours 0 .. nanos 3; a wrapper's value 0
     case PMessage(WellKnown.TimestampName) =>
       val floor = microsFloor(cfg.timestampUnit)
       v => {
         val m = v.asInstanceOf[DynamicMessage]
-        val secs = m.getOrDefault(WellKnown.timestamp.byName("seconds")).asInstanceOf[Long]
-        val nanos = m.getOrDefault(WellKnown.timestamp.byName("nanos")).asInstanceOf[Int]
+        val secs = m.slotOrDefault(0).asInstanceOf[Long]
+        val nanos = m.slotOrDefault(1).asInstanceOf[Int]
         DateTimeUtils.instantToMicros(Instant.ofEpochSecond(secs, nanos - nanos % floor))
       }
     case PMessage(WellKnown.DateName) =>
       v => {
         val m = v.asInstanceOf[DynamicMessage]
-        val y = m.getOrDefault(WellKnown.date.byName("year")).asInstanceOf[Int]
+        val y = m.slotOrDefault(0).asInstanceOf[Int]
         // year 0 = unset → sentinel day (docs/types.md:79-84)
         if (y == 0) SchemaConversion.DateSentinelEpochDay.toInt
         else DateTimeUtils.localDateToDays(LocalDate.of(y,
-          m.getOrDefault(WellKnown.date.byName("month")).asInstanceOf[Int],
-          m.getOrDefault(WellKnown.date.byName("day")).asInstanceOf[Int]))
+          m.slotOrDefault(1).asInstanceOf[Int], m.slotOrDefault(2).asInstanceOf[Int]))
       }
     case PMessage(WellKnown.TimeOfDayName) =>
       val unit = cfg.timeOfDayUnit.nanos
       v => {
         val m = v.asInstanceOf[DynamicMessage]
-        def i(n: String) = m.getOrDefault(WellKnown.timeOfDay.byName(n)).asInstanceOf[Int]
-        val totalNanos = (i("hours") * 3600L + i("minutes") * 60L + i("seconds")) *
-          1000000000L + i("nanos")
+        def i(o: Int) = m.slotOrDefault(o).asInstanceOf[Int]
+        val totalNanos = (i(0) * 3600L + i(1) * 60L + i(2)) * 1000000000L + i(3)
         totalNanos / unit
       }
     case PMessage(WellKnown.DurationName) =>
@@ -88,14 +89,13 @@ object Codecs {
       val unit = cfg.durationUnit.nanos
       v => {
         val m = v.asInstanceOf[DynamicMessage]
-        val secs = m.getOrDefault(WellKnown.duration.byName("seconds")).asInstanceOf[Long]
-        val nanos = m.getOrDefault(WellKnown.duration.byName("nanos")).asInstanceOf[Int]
+        val secs = m.slotOrDefault(0).asInstanceOf[Long]
+        val nanos = m.slotOrDefault(1).asInstanceOf[Int]
         secs * ticksPerSec + nanos / unit
       }
     case PMessage(name) if WellKnown.isWrapper(name) =>
       val inner = catalystValueWriter(WellKnown.wrapperNames(name), cfg, reg, trace)
-      val field = reg.message(name).byName("value")
-      v => inner(v.asInstanceOf[DynamicMessage].getOrDefault(field))
+      v => inner(v.asInstanceOf[DynamicMessage].slotOrDefault(0))
     case PMessage(WellKnown.EmptyName) => _ => InternalRow.empty
     case PMessage(name) if trace.contains(name) =>
       // recursion pruned to struct<> (proto_to_arrow.py:341-345): the
@@ -106,44 +106,62 @@ object Codecs {
       v => rw(v.asInstanceOf[DynamicMessage])
   }
 
-  /** One field of a message → the cell value (null for absent presence
-    * fields; defaults for absent plain fields — proto_to_arrow.py:417-453,
-    * 604-616), in internal containers (GenericArrayData /
-    * ArrayBasedMapData). */
-  private def catalystFieldWriter(f: PField, cfg: GraftConfig, reg: ProtoRegistry,
-      trace: Vector[String]): DynamicMessage => Any = {
+  /** Field `ordinal` of a message's slots → the cell value (null for
+    * absent presence fields; defaults for absent plain fields —
+    * proto_to_arrow.py:417-453, 604-616), in internal containers
+    * (GenericArrayData / ArrayBasedMapData). */
+  private def catalystFieldWriter(f: PField, ordinal: Int, cfg: GraftConfig,
+      reg: ProtoRegistry, trace: Vector[String]): Array[Any] => Any = {
     if (f.isMap) {
       val kw = catalystValueWriter(f.mapKey, cfg, reg, trace)
       val vw = catalystValueWriter(f.mapValue, cfg, reg, trace)
-      if (cfg.mapAsList) { m =>
-        new GenericArrayData(m.getOrDefault(f).asInstanceOf[Map[Any, Any]]
-          .map { case (k, v) => InternalRow(kw(k), vw(v)) }.toArray[Any])
-      } else { m =>
-        val kvs = m.getOrDefault(f).asInstanceOf[Map[Any, Any]].toArray
-        new ArrayBasedMapData(
-          new GenericArrayData(kvs.map(kv => kw(kv._1))),
-          new GenericArrayData(kvs.map(kv => vw(kv._2))))
+      def entries(s: Array[Any]): Map[Any, Any] =
+        if (s(ordinal) == null) Map.empty else s(ordinal).asInstanceOf[Map[Any, Any]]
+      if (cfg.mapAsList) { s =>
+        val kvs = entries(s)
+        val out = new Array[Any](kvs.size)
+        var i = 0
+        kvs.foreachEntry { (k, v) => out(i) = InternalRow(kw(k), vw(v)); i += 1 }
+        new GenericArrayData(out)
+      } else { s =>
+        val kvs = entries(s)
+        val ks = new Array[Any](kvs.size)
+        val vs = new Array[Any](kvs.size)
+        var i = 0
+        kvs.foreachEntry { (k, v) => ks(i) = kw(k); vs(i) = vw(v); i += 1 }
+        new ArrayBasedMapData(new GenericArrayData(ks), new GenericArrayData(vs))
       }
     } else if (f.repeated) {
       val vw = catalystValueWriter(f.typ, cfg, reg, trace)
-      m => new GenericArrayData(
-        m.getOrDefault(f).asInstanceOf[Vector[Any]].map(vw).toArray[Any])
+      s => {
+        val xs = if (s(ordinal) == null) Vector.empty else s(ordinal).asInstanceOf[Vector[Any]]
+        val out = new Array[Any](xs.length)
+        var i = 0
+        xs.foreach { x => out(i) = vw(x); i += 1 }
+        new GenericArrayData(out)
+      }
     } else if (f.hasPresence) {
       val vw = catalystValueWriter(f.typ, cfg, reg, trace)
-      m => m.get(f.number) match {
-        case Some(v) => vw(v)
-        case None => null
-      }
+      s => if (s(ordinal) == null) null else vw(s(ordinal))
     } else {
       val vw = catalystValueWriter(f.typ, cfg, reg, trace)
-      m => vw(m.getOrDefault(f))
+      val default = DynamicMessage.defaultFor(f)
+      s => vw(if (s(ordinal) == null) default else s(ordinal))
     }
   }
 
   private def catalystRowWriter(md: PMessageDesc, cfg: GraftConfig, reg: ProtoRegistry,
       trace: Vector[String]): DynamicMessage => InternalRow = {
-    val writers = md.fields.map(f => catalystFieldWriter(f, cfg, reg, trace)).toArray
-    m => new GenericInternalRow(writers.map(w => w(m)))
+    val writers = md.fieldArray.zipWithIndex.map { case (f, o) =>
+      catalystFieldWriter(f, o, cfg, reg, trace)
+    }
+    m => {
+      val slots = m.slotsIn(md)
+      val cells = new Array[Any](writers.length)
+      var i = 0
+      while (i < cells.length) { cells(i) = writers(i)(slots); i += 1 }
+      new GenericInternalRow(cells)
+    }
   }
 
   /** Compiled message → InternalRow writer (top-level entry). */
@@ -193,9 +211,8 @@ object Codecs {
     case PMessage(WellKnown.TimestampName) =>
       v => {
         val micros = v.asInstanceOf[Long]
-        DynamicMessage(WellKnown.timestamp, Map(
-          1 -> Math.floorDiv(micros, 1000000L),
-          2 -> (Math.floorMod(micros, 1000000L) * 1000L).toInt))
+        DynamicMessage.fromSlots(WellKnown.timestamp, Array[Any](
+          Math.floorDiv(micros, 1000000L), (Math.floorMod(micros, 1000000L) * 1000L).toInt))
       }
     case PMessage(WellKnown.DateName) =>
       v => {
@@ -204,19 +221,19 @@ object Codecs {
           DynamicMessage.empty(WellKnown.date) // sentinel → unset Date()
         else {
           val ld = LocalDate.ofEpochDay(days.toLong)
-          DynamicMessage(WellKnown.date,
-            Map(1 -> ld.getYear, 2 -> ld.getMonthValue, 3 -> ld.getDayOfMonth))
+          DynamicMessage.fromSlots(WellKnown.date,
+            Array[Any](ld.getYear, ld.getMonthValue, ld.getDayOfMonth))
         }
       }
     case PMessage(WellKnown.TimeOfDayName) =>
       val unit = cfg.timeOfDayUnit.nanos
       v => {
         val totalNanos = toLong(v) * unit
-        DynamicMessage(WellKnown.timeOfDay, Map(
-          1 -> (totalNanos / 3600000000000L).toInt,
-          2 -> ((totalNanos / 60000000000L) % 60).toInt,
-          3 -> ((totalNanos / 1000000000L) % 60).toInt,
-          4 -> (totalNanos % 1000000000L).toInt))
+        DynamicMessage.fromSlots(WellKnown.timeOfDay, Array[Any](
+          (totalNanos / 3600000000000L).toInt,
+          ((totalNanos / 60000000000L) % 60).toInt,
+          ((totalNanos / 1000000000L) % 60).toInt,
+          (totalNanos % 1000000000L).toInt))
       }
     case PMessage(WellKnown.DurationName) =>
       val ticksPerSec = 1000000000L / cfg.durationUnit.nanos
@@ -225,16 +242,16 @@ object Codecs {
         // floor decomposition — nanos always >= 0, like the reference's
         // Python // and % (arrow_to_proto.py:84-104)
         val ticks = toLong(v)
-        DynamicMessage(WellKnown.duration, Map(
-          1 -> Math.floorDiv(ticks, ticksPerSec),
-          2 -> (Math.floorMod(ticks, ticksPerSec) * unit).toInt))
+        DynamicMessage.fromSlots(WellKnown.duration, Array[Any](
+          Math.floorDiv(ticks, ticksPerSec), (Math.floorMod(ticks, ticksPerSec) * unit).toInt))
       }
     case PMessage(name) if WellKnown.isWrapper(name) =>
       val wrapperDesc = reg.message(name)
       val inner = catalystValueReader(WellKnown.wrapperNames(name), dt, cfg, reg)
-      v => DynamicMessage(wrapperDesc, Map(1 -> inner(v)))
+      v => DynamicMessage.fromSlots(wrapperDesc, Array[Any](inner(v)))
     case PMessage(WellKnown.EmptyName) =>
-      _ => DynamicMessage.empty(WellKnown.empty)
+      val empty = DynamicMessage.empty(WellKnown.empty)
+      _ => empty
     case PMessage(name) =>
       // nested messages decode against the *actual* struct type in the
       // data, which may have fewer columns than the descriptor
@@ -248,8 +265,10 @@ object Codecs {
       v => rr(v.asInstanceOf[InternalRow])
   }
 
+  /** One column → the value for the field's slot, or null when absent
+    * (empty repeated/map values are dropped by the message constructor). */
   private def catalystFieldReader(f: PField, idx: Int, dt: DataType,
-      cfg: GraftConfig, reg: ProtoRegistry): InternalRow => Option[(Int, Any)] = {
+      cfg: GraftConfig, reg: ProtoRegistry): InternalRow => Any = {
     if (f.isMap) {
       val (kDt, vDt) = dt match {
         case ArrayType(StructType(fields), _) if cfg.mapAsList =>
@@ -268,29 +287,31 @@ object Codecs {
       }
       def vOrDefault(v: Any): Any = if (v == null) defaultV else vr(v)
       if (cfg.mapAsList) { (row: InternalRow) =>
-        if (row.isNullAt(idx)) None
+        if (row.isNullAt(idx)) null
         else {
           val entries = row.getArray(idx)
-          val n = entries.numElements()
-          var m = Map.empty[Any, Any]
+          val m = Map.newBuilder[Any, Any]
           var i = 0
-          while (i < n) {
+          while (i < entries.numElements()) {
             val e = entries.getStruct(i, 2)
             m += kr(e.get(0, kDt)) -> vOrDefault(e.get(1, vDt))
             i += 1
           }
-          if (m.isEmpty) None else Some(f.number -> m)
+          m.result()
         }
       } else { (row: InternalRow) =>
-        if (row.isNullAt(idx)) None
+        if (row.isNullAt(idx)) null
         else {
           val md = row.getMap(idx)
-          val ks = md.keyArray().toObjectArray(kDt)
-          val vs = md.valueArray().toObjectArray(vDt)
-          var m = Map.empty[Any, Any]
+          val ks = md.keyArray()
+          val vs = md.valueArray()
+          val m = Map.newBuilder[Any, Any]
           var i = 0
-          while (i < ks.length) { m += kr(ks(i)) -> vOrDefault(vs(i)); i += 1 }
-          if (m.isEmpty) None else Some(f.number -> m)
+          while (i < ks.numElements()) {
+            m += kr(ks.get(i, kDt)) -> vOrDefault(if (vs.isNullAt(i)) null else vs.get(i, vDt))
+            i += 1
+          }
+          m.result()
         }
       }
     } else if (f.repeated) {
@@ -300,46 +321,50 @@ object Codecs {
       }
       val vr = catalystValueReader(f.typ, elemType, cfg, reg)
       (row: InternalRow) =>
-        if (row.isNullAt(idx)) None
+        if (row.isNullAt(idx)) null
         else {
-          // a null ELEMENT raises loudly: proto repeated fields cannot
-          // hold nulls, and silently dropping the element would shrink
-          // the list and break positional correlation (the reference
-          // errors on the same input — AppendAssigner converts the null
-          // scalar and protobuf rejects the None append)
-          val xs = row.getArray(idx).toObjectArray(elemType).map { v =>
-            if (v == null) throw new IllegalArgumentException(
+          val a = row.getArray(idx)
+          val xs = Vector.newBuilder[Any]
+          var i = 0
+          while (i < a.numElements()) {
+            // a null ELEMENT raises loudly: proto repeated fields cannot
+            // hold nulls, and silently dropping the element would shrink
+            // the list and break positional correlation (the reference
+            // errors on the same input — AppendAssigner converts the null
+            // scalar and protobuf rejects the None append)
+            if (a.isNullAt(i)) throw new IllegalArgumentException(
               s"null element in repeated field ${f.name}: proto repeated " +
                 "fields cannot represent null")
-            vr(v)
-          }.toVector
-          if (xs.isEmpty) None else Some(f.number -> xs)
+            xs += vr(a.get(i, elemType))
+            i += 1
+          }
+          xs.result()
         }
     } else {
       val vr = catalystValueReader(f.typ, dt, cfg, reg)
-      (row: InternalRow) =>
-        if (row.isNullAt(idx)) None // null → unset (presence) / default (plain)
-        else Some(f.number -> vr(row.get(idx, dt)))
+      // null → unset (presence) / default (plain)
+      (row: InternalRow) => if (row.isNullAt(idx)) null else vr(row.get(idx, dt))
     }
   }
 
   /** Compiled InternalRow → message reader against a concrete row schema.
     * Columns missing from the schema are skipped (the reference's
     * tolerate-missing-columns semantics, arrow_to_proto.py:633-656);
-    * null cells in non-presence positions read as proto defaults. */
+    * null cells in non-presence positions read as proto defaults. Each
+    * present column fills its field's slot directly. */
   def internalRowReader(md: PMessageDesc, schema: StructType, cfg: GraftConfig,
       reg: ProtoRegistry): InternalRow => DynamicMessage = {
-    val steps = md.fields.flatMap { f =>
+    val (ordinals, readers) = md.fieldArray.zipWithIndex.flatMap { case (f, o) =>
       val idx = schema.fieldNames.indexOf(f.name)
       if (idx < 0) None // column absent: skip field
-      else Some(catalystFieldReader(f, idx, schema.fields(idx).dataType, cfg, reg))
-    }.toArray
+      else Some(o -> catalystFieldReader(f, idx, schema.fields(idx).dataType, cfg, reg))
+    }.unzip
+    val width = md.fieldArray.length
     row => {
-      var values = Map.empty[Int, Any]
-      steps.foreach { step =>
-        step(row).foreach { case (num, v) => values += (num -> v) }
-      }
-      DynamicMessage(md, values)
+      val slots = new Array[Any](width)
+      var i = 0
+      while (i < readers.length) { slots(ordinals(i)) = readers(i)(row); i += 1 }
+      DynamicMessage.fromSlots(md, slots)
     }
   }
 }

@@ -82,12 +82,28 @@ final case class PField(
     !repeated && !isMap && (explicitOptional || typ.isInstanceOf[PType.PMessage])
 }
 
+/** A message type. A field's *ordinal* is its position in `fields`; it
+  * indexes the slot array of a [[DynamicMessage]] and the compiled codec
+  * closures. The ordinal tables are `@transient lazy`, so a deserialized
+  * descriptor rebuilds them on first use. */
 final case class PMessageDesc(fullName: String, fields: Seq[PField]) extends Serializable {
   @transient lazy val byName: Map[String, PField] = fields.map(f => f.name -> f).toMap
   @transient lazy val byNumber: Map[Int, PField] = fields.map(f => f.number -> f).toMap
-  /** Canonical (ascending field number) encode order — precomputed here
-    * because wire encode runs once per nested message per row. */
-  @transient lazy val fieldsByNumberAsc: Seq[PField] = fields.sortBy(_.number)
+  /** Fields indexed by ordinal. */
+  @transient lazy val fieldArray: Array[PField] = fields.toArray
+  /** Field numbers indexed by ordinal. */
+  @transient lazy val numbers: Array[Int] = fields.map(_.number).toArray
+  /** Ordinals in ascending field-number order: the wire encoder's canonical
+    * field order, and (with `numbersAsc`) the number → ordinal index. */
+  @transient lazy val ordinalsByNumber: Array[Int] =
+    fields.indices.sortBy(fields(_).number).toArray
+  @transient private lazy val numbersAsc: Array[Int] = ordinalsByNumber.map(numbers(_))
+  /** Ordinal of field `number`, or -1 when the message has no such field
+    * (binary search over the ascending field numbers). */
+  def ordinalOf(number: Int): Int = {
+    val i = java.util.Arrays.binarySearch(numbersAsc, number)
+    if (i < 0) -1 else ordinalsByNumber(i)
+  }
   def name: String = fullName.substring(fullName.lastIndexOf('.') + 1)
 }
 
@@ -167,6 +183,8 @@ object WellKnown {
   * equality, so bytes travel as this wrapper inside [[DynamicMessage]]. */
 final class Bytes private (private val arr: Array[Byte]) extends Serializable {
   def toArray: Array[Byte] = arr.clone()
+  /** The backing array, uncopied — for codecs that only read it. */
+  private[proto] def unsafeArray: Array[Byte] = arr
   def length: Int = arr.length
   def isEmpty: Boolean = arr.isEmpty
   override def equals(o: Any): Boolean = o match {

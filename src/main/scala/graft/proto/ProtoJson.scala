@@ -25,11 +25,13 @@ object ProtoJson {
 
   def fromNode(node: JsonNode, md: PMessageDesc, reg: ProtoRegistry): DynamicMessage = {
     require(node.isObject, s"expected object for ${md.fullName}, got $node")
-    var values = Map.empty[Int, Any]
-    md.fields.foreach { f =>
+    val fields = md.fieldArray
+    val slots = new Array[Any](fields.length)
+    fields.indices.foreach { o =>
+      val f = fields(o)
       val n = if (node.has(f.name)) node.get(f.name) else node.get(camel(f.name))
       if (n != null && !n.isNull) {
-        val v =
+        slots(o) =
           if (f.isMap) {
             n.asInstanceOf[ObjectNode].properties().asScala.map { e =>
               parseMapKey(e.getKey, f.mapKey) -> parseValue(e.getValue, f.mapValue, reg)
@@ -38,10 +40,9 @@ object ProtoJson {
             n.asInstanceOf[ArrayNode].elements().asScala
               .map(e => parseValue(e, f.typ, reg)).toVector
           } else parseValue(n, f.typ, reg)
-        values += (f.number -> v)
       }
     }
-    DynamicMessage(md, values)
+    DynamicMessage.fromSlots(md, slots)
   }
 
   private def camel(snake: String): String = {
@@ -153,23 +154,23 @@ object ProtoJson {
         case Some(nm) => mapper.getNodeFactory.textNode(nm)
         case None => mapper.getNodeFactory.numberNode(num)
       }
+    // well-known types read their fields by ordinal: seconds/nanos are 0/1
+    // in Timestamp and Duration, a wrapper's value is 0
     case PType.PMessage(WellKnown.TimestampName) =>
       val m = v.asInstanceOf[DynamicMessage]
       val i = Instant.ofEpochSecond(
-        m.getOrDefault(WellKnown.timestamp.byName("seconds")).asInstanceOf[Long],
-        m.getOrDefault(WellKnown.timestamp.byName("nanos")).asInstanceOf[Int])
+        m.slotOrDefault(0).asInstanceOf[Long], m.slotOrDefault(1).asInstanceOf[Int])
       mapper.getNodeFactory.textNode(i.toString)
     case PType.PMessage(WellKnown.DurationName) =>
       val m = v.asInstanceOf[DynamicMessage]
-      val secs = m.getOrDefault(WellKnown.duration.byName("seconds")).asInstanceOf[Long]
-      val nanos = m.getOrDefault(WellKnown.duration.byName("nanos")).asInstanceOf[Int]
+      val secs = m.slotOrDefault(0).asInstanceOf[Long]
+      val nanos = m.slotOrDefault(1).asInstanceOf[Int]
       val bd = java.math.BigDecimal.valueOf(secs)
         .add(java.math.BigDecimal.valueOf(nanos.toLong, 9))
       mapper.getNodeFactory.textNode(bd.stripTrailingZeros().toPlainString + "s")
     case PType.PMessage(name) if WellKnown.isWrapper(name) =>
-      val inner = v.asInstanceOf[DynamicMessage]
-        .getOrDefault(reg.message(name).byName("value"))
-      scalarNode(inner, WellKnown.wrapperNames(name), reg)
+      scalarNode(v.asInstanceOf[DynamicMessage].slotOrDefault(0),
+        WellKnown.wrapperNames(name), reg)
     case PType.PMessage(_) => toNode(v.asInstanceOf[DynamicMessage], reg)
   }
 

@@ -113,6 +113,35 @@ class RoundTripSpec extends SparkSpec {
     assert(!back(1).has(1) && !back(1).has(3))
   }
 
+  test("negative zero doubles and floats survive messagesToDataFrame → dataFrameToMessages") {
+    // -0.0 == 0.0 under `==`, so every value is also checked by raw bits
+    val md = Schemas.msg("ExampleMessage")
+    val dv = Schemas.registry.message("google.protobuf.DoubleValue")
+    def field(n: String) = md.byName(n).number
+    val m = DynamicMessage(md, Map(
+      field("double_value") -> -0.0,
+      field("float_value") -> -0.0f,
+      field("double_values") -> Vector(-0.0, 0.0),
+      field("float_int32_map") -> Map(1 -> -0.0f),
+      field("optional_double_value") -> -0.0,
+      field("wrapped_double_value") -> DynamicMessage(dv, Map(1 -> -0.0))))
+    val df = Protarrow.messagesToDataFrame(spark, Seq(m), md, GraftConfig(), reg)
+    val back = Protarrow.dataFrameToMessages(df, md, GraftConfig(), reg).head
+    assert(back === m)
+    def bits(v: Any): Long = v match {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case f: Float => java.lang.Float.floatToRawIntBits(f).toLong & 0xFFFFFFFFL
+      case x: DynamicMessage => bits(x.get(1).get)
+    }
+    for (name <- Seq("double_value", "float_value", "optional_double_value",
+      "wrapped_double_value"))
+      assert(back.get(field(name)).map(bits) === m.get(field(name)).map(bits), name)
+    assert(back.get(field("double_values")).get.asInstanceOf[Vector[Any]].map(bits) ===
+      Vector(0x8000000000000000L, 0L))
+    assert(back.get(field("float_int32_map")).get.asInstanceOf[Map[Any, Any]].map {
+      case (k, v) => k -> bits(v) } === Map(1 -> 0x80000000L))
+  }
+
   test("missing columns are tolerated on decode (tests/test_coverage.py:345-369)") {
     val md = Schemas.msg("MyProto")
     val m = DynamicMessage(md, Map(1 -> "foo", 2 -> 7, 3 -> Vector(1, 2)))

@@ -161,4 +161,108 @@ class WireSpec extends AnyFunSuite {
       assert(back === m)
     }
   }
+
+  private def hex(b: Array[Byte]): String = b.map(x => f"${x & 0xFF}%02X").mkString(" ")
+
+  test("negative zero doubles and floats are kept, not dropped as the default") {
+    // protobuf-java keeps a plain float/double field whenever its raw bits
+    // are non-zero; -0.0 == 0.0 numerically, so a boxed `!=` lost it
+    val d = PMessageDesc("t.D", Seq(PField("d", 1, PType.PDouble)))
+    val dBytes = Array[Byte](0x09, 0, 0, 0, 0, 0, 0, 0, 0x80.toByte)
+    val dm = ProtoWire.decode(dBytes, d, reg)
+    assert(dm.get(1).map(v => java.lang.Double.doubleToRawLongBits(v.asInstanceOf[Double])) ===
+      Some(0x8000000000000000L))
+    assert(hex(ProtoWire.encode(dm, reg)) === hex(dBytes))
+    assert(hex(ProtoWire.encode(DynamicMessage(d, Map(1 -> -0.0)), reg)) === hex(dBytes))
+    assert(ProtoWire.encode(DynamicMessage(d, Map(1 -> 0.0)), reg).isEmpty)
+
+    val f = PMessageDesc("t.F", Seq(PField("f", 1, PType.PFloat)))
+    val fBytes = Array[Byte](0x0D, 0, 0, 0, 0x80.toByte)
+    val fm = ProtoWire.decode(fBytes, f, reg)
+    assert(fm.get(1).map(v => java.lang.Float.floatToRawIntBits(v.asInstanceOf[Float])) ===
+      Some(0x80000000))
+    assert(hex(ProtoWire.encode(fm, reg)) === hex(fBytes))
+    assert(hex(ProtoWire.encode(DynamicMessage(f, Map(1 -> -0.0f)), reg)) === hex(fBytes))
+    assert(ProtoWire.encode(DynamicMessage(f, Map(1 -> 0.0f)), reg).isEmpty)
+  }
+
+  // ---- length back-patching: each expected encoding is assembled here
+  // from tag, varint length and body, independently of the encoder
+
+  private def varint(n: Long): Array[Byte] = {
+    val out = Array.newBuilder[Byte]
+    var x = n
+    while ((x & ~0x7FL) != 0) { out += ((x & 0x7F) | 0x80).toByte; x >>>= 7 }
+    out += x.toByte
+    out.result()
+  }
+  private def delimited(tag: Int, body: Array[Byte]): Array[Byte] =
+    varint(tag.toLong) ++ varint(body.length.toLong) ++ body
+
+  /** The `n` (0 ≤ n ≤ len) whose `fixed` + varint(n) + n bytes make `len`. */
+  private def fill(len: Int, fixed: Int): Int =
+    (0 to len).find(n => fixed + varint(n.toLong).length + n == len)
+      .getOrElse(throw new IllegalArgumentException(s"no filler for $len"))
+
+  private val Lengths = Seq(0, 127, 128, 16383, 16384)
+
+  // Node { Node child = 1; bytes data = 2; }
+  private val node = PMessageDesc("t.Node", Seq(
+    PField("child", 1, PType.PMessage("t.Node")), PField("data", 2, PType.PBytes)))
+  private val nodeReg = new ProtoRegistry(Map(node.fullName -> node), Map.empty)
+
+  private def assertWire(m: DynamicMessage, expected: Array[Byte], r: ProtoRegistry): Unit = {
+    assert(hex(ProtoWire.encode(m, r)) === hex(expected))
+    assert(ProtoWire.decode(expected, m.descriptor, r) === m)
+  }
+
+  for (len <- Lengths) test(s"nested message payload of $len bytes is length-prefixed exactly") {
+    val (child, body) =
+      if (len == 0) (DynamicMessage.empty(node), Array.emptyByteArray)
+      else {
+        val data = Array.fill(fill(len, 1))(7.toByte)
+        (DynamicMessage(node, Map(2 -> Bytes(data))), delimited(0x12, data))
+      }
+    assert(body.length === len)
+    assertWire(DynamicMessage(node, Map(1 -> child)), delimited(0x0A, body), nodeReg)
+  }
+
+  for (len <- Lengths) test(s"packed repeated payload of $len bytes is length-prefixed exactly") {
+    val md = PMessageDesc("t.P", Seq(PField("xs", 1, PType.PInt32, repeated = true)))
+    val m = DynamicMessage(md, Map(1 -> Vector.fill(len)(1))) // one byte per element
+    // an empty repeated field is absent; a zero-length packed record decodes to it
+    val expected = if (len == 0) Array.emptyByteArray else delimited(0x0A, Array.fill(len)(1.toByte))
+    assertWire(m, expected, reg)
+    if (len == 0) assert(ProtoWire.decode(Array[Byte](0x0A, 0), md, reg) === m)
+  }
+
+  for (len <- Lengths) test(s"map entry payload of $len bytes is length-prefixed exactly") {
+    val md = PMessageDesc("t.M", Seq(
+      PField("m", 1, PType.PBytes, mapKV = Some((PType.PInt32, PType.PBytes)))))
+    if (len == 0) {
+      // both entry fields are always written, so an encoded entry is never
+      // empty; an empty entry on the wire decodes to the default key/value
+      val m = DynamicMessage(md, Map(1 -> Map(0 -> Bytes.empty)))
+      assert(ProtoWire.decode(Array[Byte](0x0A, 0), md, reg) === m)
+      assertWire(m, delimited(0x0A, Array[Byte](0x08, 0, 0x12, 0)), reg)
+    } else {
+      val data = Array.fill(fill(len, 3))(9.toByte) // key 08 01, value tag 12
+      val body = Array[Byte](0x08, 1) ++ delimited(0x12, data)
+      assert(body.length === len)
+      assertWire(DynamicMessage(md, Map(1 -> Map(1 -> Bytes(data)))), delimited(0x0A, body), reg)
+    }
+  }
+
+  test("three nested length prefixes: an inner shift cascades into its parent") {
+    // innermost payload 16383 bytes (2-byte prefix) makes its parent's
+    // payload 16386 bytes (3-byte prefix), which the grandparent then counts
+    val data = Array.fill(16380)(3.toByte)
+    val inner = delimited(0x12, data)
+    val middle = delimited(0x0A, inner)
+    val outer = delimited(0x0A, middle)
+    assert((inner.length, middle.length) === ((16383, 16386)))
+    val m = DynamicMessage(node, Map(1 -> DynamicMessage(node, Map(1 ->
+      DynamicMessage(node, Map(1 -> DynamicMessage(node, Map(2 -> Bytes(data)))))))))
+    assertWire(m, delimited(0x0A, outer), nodeReg)
+  }
 }
