@@ -1,25 +1,21 @@
 package graft
 
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.Encoders
 import graft.proto._
 import graft.conv.GraftConfig
 
 /** Per-round benchmark main (driver contract): times every registered
   * query at SPARK_GRAFT_SF_DIR plus the reference's encode/decode harness
   * shape — random ExampleMessage batches at 10/100/1k/10k rows
-  * (benchmarks/test_benchmark.py:8-21) — and prints ONE JSON line.
+  * (benchmarks/test_benchmark.py:8-21) — and prints its JSON lines.
+  * Optional args are entry-name prefixes: `Bench q09 d46` times just
+  * those entries, min-of-3 with the canary.
   *
   * Failures are NOT swallowed: a query that throws is reported in the
-  * "errors" object (and its time is the time-to-failure), so a broken
-  * query can never masquerade as a ~0 s speedup.
+  * "errors" object and left out of the total, so a broken query can
+  * never masquerade as a ~0 s speedup.
   */
 object Bench {
-
-  private def time(f: => Unit): Double = {
-    val t0 = System.nanoTime()
-    f
-    (System.nanoTime() - t0) / 1e9
-  }
 
   /** Random ExampleMessage generator with the reference harness's shape
     * (tests/random_generator.py:58-128): every field of the ~190-field
@@ -98,18 +94,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // collect_list/typed-aggregator queries build high-cardinality groups
-      // (e.g. the 1M+ posting lists of d27/d28); the default 128-group
-      // fallback would force them all to sort-based aggregation
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4000000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.cpus
+    val spark = Harness.session()
 
     // untimed warm-up: JVM/codegen/parquet-reader initialization otherwise
     // lands entirely on the alphabetically-first query (~4 s) and distorts
@@ -126,16 +112,16 @@ object Bench {
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     val samples = scala.collection.mutable.LinkedHashMap[String, scala.collection.mutable.ArrayBuffer[Double]]()
-    def fail(key: String, e: Throwable): Unit =
-      errors(key) = s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}"
+    def fail(key: String, e: Throwable): Unit = errors(key) = Harness.errorText(e)
     // one timed sample for `key`; a key that ever failed is skipped (its
     // time-to-failure is meaningless — summing it into the total would
     // let a fast crash read as a speedup; the failure lives in `errors`)
-    def sample(key: String)(f: => Unit): Unit = if (!errors.contains(key)) {
-      val t = time { try f catch { case e: Throwable => fail(key, e) } }
-      if (!errors.contains(key))
-        samples.getOrElseUpdate(key, scala.collection.mutable.ArrayBuffer()) += t
-    }
+    def sample(key: String)(run: => Either[String, Double]): Unit =
+      if (!errors.contains(key)) run match {
+        case Left(e) => errors(key) = e
+        case Right(t) =>
+          samples.getOrElseUpdate(key, scala.collection.mutable.ArrayBuffer()) += t
+      }
 
     // --- measurement protocol (self-defending, round-5) ---
     // This host shows multi-minute 30-50x degradation windows
@@ -153,34 +139,20 @@ object Bench {
     //     marks that pass's numbers suspect.
     val canaryName = "q09_customers_without_big_orders"
     val canary = scala.collection.mutable.ArrayBuffer[Double]()
-    def runCanary(): Unit = canary +=
-      (try time { SparkEntry.queries(canaryName)(spark, sfDir).count(); () }
-       catch { case _: Throwable => -1.0 })
+    def recordCanary(run: Either[String, Double]): Unit = canary += run.getOrElse(-1.0)
+    def canaryFrame = SparkEntry.queries(canaryName)(spark, sfDir)
 
-    // the cache manager is cleared before EVERY query iteration —
-    // queries cache intermediates, and cached plans canonicalize equal
-    // across invocations, so without the clear later passes would time
-    // cache reads, not the query. OS page cache staying warm across
-    // passes is the intended steady state.
-    // r13: the q81/q83/q85 family's centsHist memo ALSO survives
-    // clearCache by design (its scaladoc documents the shared-scan
-    // session contract), which meant bench passes 2-3 timed a memoized
-    // histogram instead of the lineitem scan — min-of-3 picked the warm
-    // time. The bench's numbers must be cold-cost per entry like every
-    // other cache, so the memo is evicted alongside the SQL cache; the
-    // family's reported numbers RISE accordingly (honest cold cost).
-    def clearAll(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      graft.operators.Relational2.clearMemos()
-    }
+    // every query iteration is a cold run (Harness.coldRun): the SQL
+    // cache AND the q81/q83/q85 family's centsHist memo are cleared first,
+    // so passes 2-3 time the query, not cache reads or a memoized
+    // histogram. OS page cache staying warm across passes is the intended
+    // steady state.
     val qnames = SparkEntry.queries.toSeq.sortBy(_._1).map(_._1)
       .filter(selected)
     for (_ <- 1 to 3) {
-      clearAll()
-      runCanary()
+      recordCanary(Harness.coldRun(spark)(canaryFrame))
       qnames.foreach { name =>
-        clearAll()
-        sample(name) { SparkEntry.queries(name)(spark, sfDir).count(); () }
+        sample(name)(Harness.coldRun(spark)(SparkEntry.queries(name)(spark, sfDir)))
       }
     }
 
@@ -215,7 +187,7 @@ object Bench {
       if (n == 10000 && selected(encDistKey)) {
         try {
           val ds = spark.createDataset(msgs)(Encoders.javaSerialization[DynamicMessage])
-            .repartition(cpus.toInt).cache()
+            .repartition(cpus).cache()
           ds.count()
           points += encDistKey -> (() => {
             Protarrow.messagesDatasetToDataFrame(ds, md, GraftConfig(), reg).count(); ()
@@ -231,7 +203,7 @@ object Bench {
       if (n == 10000 && selected(encWireKey)) {
         try {
           val wire = spark.createDataset(msgs.map(m => ProtoWire.encode(m, reg)))(Encoders.BINARY)
-            .repartition(cpus.toInt).cache()
+            .repartition(cpus).cache()
           wire.count()
           points += encWireKey -> (() => {
             Protarrow.fromProtoBinary(wire, md, GraftConfig(), reg).count(); ()
@@ -267,7 +239,7 @@ object Bench {
           // decode, not an accidental single-task layout
           if (n == 10000 && selected(decDistKey)) {
             try {
-              val dfd = df.repartition(cpus.toInt).cache()
+              val dfd = df.repartition(cpus).cache()
               dfd.count()
               points += decDistKey -> (() => {
                 Protarrow.toProtoBinary(dfd, md, GraftConfig(), reg).count(); ()
@@ -277,9 +249,10 @@ object Bench {
         }
       }
     }
+    // the cached inputs must survive, so these passes never clear
     for (_ <- 1 to 3) {
-      runCanary()
-      points.foreach { case (key, f) => sample(key)(f()) }
+      recordCanary(Harness.measure(canaryFrame.count()))
+      points.foreach { case (key, f) => sample(key)(Harness.measure(f())) }
     }
 
     samples.foreach { case (k, ts) => results(k) = ts.min }
@@ -322,13 +295,10 @@ object Bench {
     // tail window. (Round-5's artifact had the opposite order and
     // preserved neither summary nor errors.) Still one JSON line.
     def r4(v: Double): String = "%.4f".format(v)
-    val qs = results.map { case (k, v) => JsonOut.str(k) + ":" + r4(v) }
-      .mkString("{", ",", "}")
-    val es = errors.map { case (k, v) => JsonOut.str(k) + ":" + JsonOut.str(v) }
-      .mkString("{", ",", "}")
-    val cs = canary.map(r4).mkString("[", ",", "]")
-    val rs = regressions.map { case (k, v) => JsonOut.str(k) + ":" + JsonOut.str(v) }
-      .mkString("{", ",", "}")
+    val qs = JsonOut.obj(results.map { case (k, v) => k -> r4(v) })
+    val es = JsonOut.obj(errors.map { case (k, v) => k -> JsonOut.str(v) })
+    val cs = JsonOut.arr(canary.map(r4))
+    val rs = JsonOut.obj(regressions.map { case (k, v) => k -> JsonOut.str(v) })
     val total = results.values.sum
     val line = s"""{"queries":$qs,"n_queries":${results.size},"metric":"total","value":${r4(total)},"unit":"sec","canary_query":${JsonOut.str(canaryName)},"canary_sec":$cs,"regressions":$rs,"errors":$es,"sf":"$sfDir"}"""
     println(line)

@@ -1,11 +1,21 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.SimpleMode
+import org.apache.spark.sql.execution.{FormattedMode, SimpleMode}
+import java.nio.file.{Files, Paths}
 
-/** Dev aid: dump physical plans for the PLANS.md evidence file.
-  * `runMain graft.PlanDump [query names...]` — defaults to the
-  * representative set. */
+/** Dev aid: plan evidence from the harness session ([[Harness.session]]).
+  *
+  *   runMain graft.PlanDump [dir] [query names...]
+  *     prints each physical plan to stdout (the PLANS.md evidence file)
+  *   runMain graft.PlanDump --snap <tag> <suffix> [dir] [query names...]
+  *     writes `explain("formatted")` to plans/<tag>/<query>_<suffix>.txt —
+  *     the before/after plan evidence of an optimization
+  *
+  * Names default to the representative set; the data dir defaults to
+  * sf0.001 (plan SHAPE is scale-independent here: the same code path
+  * builds the frame at every SF) and an absolute-path first arg overrides
+  * it, e.g. to diff plans against the VolumeBench 10x corpus. A query that
+  * fails to plan yields `ERROR: <message>` in place of its plan. */
 object PlanDump {
   private val defaults = Seq(
     "q01_pricing_summary", "q02_revenue_by_nation", "pa61_cast_normalize",
@@ -52,23 +62,35 @@ object PlanDump {
     "x131_decontaminated_rewrite", "x132_source_priority_sample",
     "s49_graph_recall_audit", "m50_media_best_keeper", "x133_dsir_selection")
 
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // an absolute-path first arg overrides the data dir (e.g. pointing at
-    // the VolumeBench 10x corpus to diff plans across scales)
+  def main(args: Array[String]): Unit = args.toSeq match {
+    case "--snap" +: tag +: suffix +: rest => dump(Some((tag, suffix)), rest)
+    case "--snap" +: _ =>
+      throw new IllegalArgumentException(
+        "usage: PlanDump --snap <tag> <suffix> [dir] [query names...]")
+    case rest => dump(None, rest)
+  }
+
+  /** Prints the plans, or with `snap = Some((tag, suffix))` writes them. */
+  private def dump(snap: Option[(String, String)], args: Seq[String]): Unit = {
     val (dir, rest) = args.headOption.filter(_.startsWith("/"))
       .map(d => (d, args.tail.toSeq)).getOrElse(("/root/testdata/sf0.001", args.toSeq))
     val names = if (rest.nonEmpty) rest else defaults
+    val spark = Harness.session()
+    snap.foreach { case (tag, _) => Files.createDirectories(Paths.get(s"plans/$tag")) }
     for (n <- names) {
-      println(s"===== $n")
-      println(SparkEntry.queries(n)(spark, dir)
-        .queryExecution.explainString(SimpleMode))
+      val plan =
+        try SparkEntry.queries(n)(spark, dir).queryExecution
+          .explainString(if (snap.isEmpty) SimpleMode else FormattedMode)
+        catch { case e: Throwable => s"ERROR: ${e.getMessage}" }
+      snap match {
+        case None =>
+          println(s"===== $n")
+          println(plan)
+        case Some((tag, suffix)) =>
+          val path = s"plans/$tag/${n}_$suffix.txt"
+          Files.writeString(Paths.get(path), plan)
+          println(s"[plandump] wrote $path (${plan.length} chars)")
+      }
     }
     spark.stop()
   }

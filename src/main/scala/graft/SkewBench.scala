@@ -34,10 +34,6 @@ import org.apache.spark.sql.functions._
   */
 object SkewBench {
 
-  private def time(f: => Unit): Double = {
-    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-  }
-
   val DupFactor = 10000
   val BoundSec = 120.0
   val Queries = Seq("d26_exact_dedup", "d27_ngram_jaccard", "d28_minhash_lsh",
@@ -504,10 +500,10 @@ object SkewBench {
     * for bench scale: the defaults target 256 MB production partitions,
     * while the DupFactor pile here is tens of MB — the RATIO (hot ≫
     * factor × median) is what production skew looks like. Runs the
-    * UNSALTED q26 join shape and returns (seconds, splitFired) from the
-    * post-execution adaptive plan; confs are restored afterwards so no
-    * other bench line inherits the tuning. */
-  def aqeSkewJoin(spark: SparkSession, outDir: String): (Double, Boolean) = {
+    * UNSALTED q26 join shape and returns its seconds, or an error when it
+    * throws or the post-execution adaptive plan shows no skew split; confs
+    * are restored afterwards so no other bench line inherits the tuning. */
+  def aqeSkewJoin(spark: SparkSession, outDir: String): Either[String, Double] = {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
@@ -548,8 +544,8 @@ object SkewBench {
         .select("o_orderkey", "o_orderpriority")
       val joined = li.join(o, col("l_orderkey") === col("o_orderkey"))
       val qe = joined.queryExecution
-      val sec = time { qe.toRdd.count(); () }
-      (sec, skewJoins(qe.executedPlan).nonEmpty)
+      Harness.measure { qe.toRdd.count(); () }.filterOrElse(
+        _ => skewJoins(qe.executedPlan).nonEmpty, "AQE skew-join split did not fire")
     } finally saved.foreach {
       case (k, Some(v)) => c.set(k, v)
       case (k, None) => c.unset(k)
@@ -560,49 +556,32 @@ object SkewBench {
     ScaleContracts.verifyAndRecord("skew", Queries)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_SKEW_DIR", "/tmp/graft_skew")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4000000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     generate(spark, sfDir, outDir)
 
+    // Bench's rule: a failed entry is reported in `errors` (and so in
+    // `violations`) and never summed — its time-to-failure is no cost
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
+    def record(name: String, run: Either[String, Double]): Unit =
+      run.fold(errors(name) = _, results(name) = _)
     Queries.foreach { name =>
-      spark.sharedState.cacheManager.clearCache()
-      graft.operators.Relational2.clearMemos()
-      results(name) = time {
-        try { SparkEntry.queries(name)(spark, outDir).count(); () }
-        catch { case e: Throwable =>
-          errors(name) = s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}"
-        }
-      }
+      record(name, Harness.coldRun(spark)(SparkEntry.queries(name)(spark, outDir)))
     }
     // the AQE-split twin of q26 (unsalted join, runtime re-plan): timed
-    // under the same bound, plus a flag proving the split actually fired
-    spark.sharedState.cacheManager.clearCache()
-    val (aqeSec, aqeFired) =
+    // under the same bound, and an error unless the split actually fired
+    Harness.clear(spark)
+    val aqe =
       try aqeSkewJoin(spark, outDir)
-      catch { case e: Throwable =>
-        errors("aqe_skew_join") =
-          s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}"
-        (0.0, false)
-      }
-    results("aqe_skew_join") = aqeSec
-    if (!aqeFired && !errors.contains("aqe_skew_join"))
-      errors("aqe_skew_join") = "AQE skew-join split did not fire"
+      catch { case e: Throwable => Left(Harness.errorText(e)) }
+    record("aqe_skew_join", aqe)
 
     val violations = results.filter(_._2 > BoundSec).keys.toSeq ++ errors.keys
-    val qs = results.map { case (k, v) => JsonOut.str(k) + ":" + v }.mkString("{", ",", "}")
-    val es = errors.map { case (k, v) => JsonOut.str(k) + ":" + JsonOut.str(v) }.mkString("{", ",", "}")
-    val vs = violations.map(JsonOut.str).mkString("[", ",", "]")
-    println(s"""{"metric":"skew_total","value":${results.values.sum},"unit":"sec","bound_sec":$BoundSec,"dup_factor":$DupFactor,"aqe_skew_split":$aqeFired,"queries":$qs,"errors":$es,"violations":$vs,"sf":"$sfDir"}""")
+    val qs = JsonOut.obj(results.map { case (k, v) => k -> v.toString })
+    val es = JsonOut.obj(errors.map { case (k, v) => k -> JsonOut.str(v) })
+    val vs = JsonOut.arr(violations.map(JsonOut.str))
+    println(s"""{"metric":"skew_total","value":${results.values.sum},"unit":"sec","bound_sec":$BoundSec,"dup_factor":$DupFactor,"aqe_skew_split":${aqe.isRight},"queries":$qs,"errors":$es,"violations":$vs,"sf":"$sfDir"}""")
     spark.stop()
     if (violations.nonEmpty) sys.exit(1)
   }

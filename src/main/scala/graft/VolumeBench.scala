@@ -103,10 +103,6 @@ object VolumeBench {
     // component + a component-keyed keeper re-attach (d39's posture)
     "m50_media_best_keeper")
 
-  private def time(f: => Unit): Double = {
-    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-  }
-
   /** Synthesize the Mult× tables into `outDir` (idempotent per source
     * content — gated on the _SUCCESS marker). */
   def generate(spark: SparkSession, sfDir: String, outDir: String): Unit = {
@@ -189,58 +185,45 @@ object VolumeBench {
     // a silent skip
     ScaleContracts.verifyAndRecord("volume", Queries)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4000000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     val volDir = sys.env.getOrElse("SPARK_GRAFT_VOLUME_DIR",
       s"${System.getProperty("java.io.tmpdir")}/graft_volume_" +
         graft.operators.Scale.sourceKey(sfDir, "documents") + s"_x$Mult")
-    val genSec = time { generate(spark, sfDir, volDir) }
+    val genSec = Harness.timed { generate(spark, sfDir, volDir) }
 
     val only = args.headOption.map(_.split(",").toSet)
     val names = Queries.filter(n => only.forall(_.contains(n)))
     val results = scala.collection.mutable.LinkedHashMap[String, Map[String, Double]]()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     names.foreach { name =>
-      try {
-        // warm-up at the base SF absorbs codegen/class-load constants so
-        // t1 measures the engine, not the JIT
-        spark.sharedState.cacheManager.clearCache()
-        graft.operators.Relational2.clearMemos()
-        SparkEntry.queries(name)(spark, sfDir).count()
-        // min-of-3 on BOTH sides: a single host-noise spike on either
-        // measurement distorts the ratio in either direction (round-8's
-        // q83 base read 9.2 s vs its 3.9 s standing value)
-        // frame CONSTRUCTION goes inside the timer: the export operators
-        // (x116/x117) perform their physical writes eagerly at
-        // construction — timing only count() would measure the audit and
-        // skip the work (x116's base read 0.22 s vs its 2.7 s standing
-        // bench value when construction sat outside the timer)
-        def minOf3(dir: String): Double =
-          (1 to 3).map { _ =>
-            spark.sharedState.cacheManager.clearCache()
-            graft.operators.Relational2.clearMemos()
-            time { SparkEntry.queries(name)(spark, dir).count(); () }
-          }.min
-        val (e1, b1) = exchanges(SparkEntry.queries(name)(spark, sfDir))
-        val t1 = minOf3(sfDir)
-        val (e10, b10) = exchanges(SparkEntry.queries(name)(spark, volDir))
-        val t10 = minOf3(volDir)
-        val ratio = t10 / (Mult * t1)
-        results(name) = Map("t_base" -> t1, "t_big" -> t10,
-          "cost_ratio" -> ratio, "exch_base" -> e1.toDouble,
-          "exch_big" -> e10.toDouble, "bexch_base" -> b1.toDouble,
-          "bexch_big" -> b10.toDouble)
-      } catch { case e: Throwable =>
-        errors(name) = s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(160)}"
-      }
+      def cold(dir: String) = Harness.coldRun(spark)(SparkEntry.queries(name)(spark, dir))
+      // min-of-3 on BOTH sides: a single host-noise spike on either
+      // measurement distorts the ratio in either direction (round-8's
+      // q83 base read 9.2 s vs its 3.9 s standing value); the first
+      // failing run ends the entry
+      def minOf3(dir: String): Either[String, Double] =
+        (1 to 3).foldLeft[Either[String, Double]](Right(Double.PositiveInfinity)) {
+          (best, _) => best.flatMap(b => cold(dir).map(math.min(b, _)))
+        }
+      val run =
+        try {
+          // warm-up at the base SF absorbs codegen/class-load constants so
+          // t1 measures the engine, not the JIT
+          cold(sfDir).flatMap { _ =>
+            val (e1, b1) = exchanges(SparkEntry.queries(name)(spark, sfDir))
+            minOf3(sfDir).flatMap { t1 =>
+              val (e10, b10) = exchanges(SparkEntry.queries(name)(spark, volDir))
+              minOf3(volDir).map { t10 =>
+                Map("t_base" -> t1, "t_big" -> t10,
+                  "cost_ratio" -> t10 / (Mult * t1), "exch_base" -> e1.toDouble,
+                  "exch_big" -> e10.toDouble, "bexch_base" -> b1.toDouble,
+                  "bexch_big" -> b10.toDouble)
+              }
+            }
+          }
+        } catch { case e: Throwable => Left(Harness.errorText(e)) }
+      run.fold(errors(name) = _, results(name) = _)
     }
     // the audited 10× tier is engineered SCALE-INVARIANT: any new
     // exchange is a violation (this strictness is what caught s43's
@@ -281,26 +264,22 @@ object VolumeBench {
       if (!names.contains("s40_knn_graph")) "{}"
       else try {
         def fmt(m: Map[String, Double]) =
-          m.toSeq.sortBy(_._1).map { case (k, v) => JsonOut.str(k) + ":" + v }
-            .mkString("{", ",", "}")
-        spark.sharedState.cacheManager.clearCache()
+          JsonOut.obj(m.toSeq.sortBy(_._1).map { case (k, v) => k -> v.toString })
+        Harness.clear(spark)
         val base = graft.operators.Similarity.knnRecallProbe(spark, sfDir)
         val big = graft.operators.Similarity.knnRecallProbe(spark, volDir)
         s"""{"base":${fmt(base)},"big":${fmt(big)}}"""
       } catch { case e: Throwable =>
-        errors("knn_recall_probe") =
-          s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(160)}"
+        errors("knn_recall_probe") = Harness.errorText(e)
         "{}"
       }
-    val qs = results.map { case (k, m) =>
-      JsonOut.str(k) + ":" + m.map { case (f, v) => JsonOut.str(f) + ":" + v }
-        .mkString("{", ",", "}")
-    }.mkString("{", ",", "}")
-    val es = errors.map { case (k, v) => JsonOut.str(k) + ":" + JsonOut.str(v) }
-      .mkString("{", ",", "}")
-    val vs = violations.map(JsonOut.str).mkString("[", ",", "]")
+    val qs = JsonOut.obj(results.map { case (k, m) =>
+      k -> JsonOut.obj(m.map { case (f, v) => f -> v.toString })
+    })
+    val es = JsonOut.obj(errors.map { case (k, v) => k -> JsonOut.str(v) })
+    val vs = JsonOut.arr(violations.map(JsonOut.str))
     val total = results.values.map(_("t_big")).sum
-    val rp = replans.map(JsonOut.str).mkString("[", ",", "]")
+    val rp = JsonOut.arr(replans.map(JsonOut.str))
     println(s"""{"metric":"volume_total","value":$total,"unit":"sec","mult":$Mult,"cost_ratio_bound":$CostRatioBound,"gen_sec":$genSec,"queries":$qs,"errors":$es,"violations":$vs,"replans":$rp,"recall":$recallJson,"sf":"$sfDir"}""")
     spark.stop()
     if (violations.nonEmpty) sys.exit(1)

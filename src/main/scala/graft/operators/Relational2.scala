@@ -468,13 +468,11 @@ object Relational2 {
     * Keyed by applicationId + dir: gauntlets that run the family over
     * multiple corpora in one JVM never cross-contaminate.
     *
-    * The memo deliberately survives `cacheManager.clearCache()` — a
-    * BENCH session is supposed to measure the family at its shared-scan
-    * cost. The GAUNTLETS are the opposite contract (their cold min-of-3
-    * must audit the lineitem scan's linearity), so they call
-    * [[clearMemos]] alongside clearCache in every timed iteration;
-    * eviction also unpersists the frames and releases the
-    * localCheckpoint blocks to the ContextCleaner. */
+    * The memo deliberately survives `cacheManager.clearCache()`; the
+    * harness's cold-run measure (`Harness.coldRun`, behind every timing
+    * main) calls [[clearMemos]] alongside it, so each timed run pays the
+    * lineitem scan — its cold cost. Eviction also unpersists the frames
+    * and releases the localCheckpoint blocks to the ContextCleaner. */
   private val centsHistMemo =
     new java.util.concurrent.ConcurrentHashMap[(String, String),
       org.apache.spark.sql.DataFrame]()
@@ -488,6 +486,8 @@ object Relational2 {
     }
     centsHistMemo.clear()
   }
+  /** Memoized histograms currently held (the harness spec's probe). */
+  private[graft] def memoCount: Int = centsHistMemo.size()
   private def centsHist(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     centsHistMemo.computeIfAbsent(
